@@ -161,27 +161,52 @@ def ngram_jaccard_pairs(
     )
 
 
+def minhash_value(i: int, shingle: Column, portable: bool = True) -> Column:
+    """Hash ``i`` of the MinHash family, applied to one shingle.
+
+    ``portable=True``: md5 of ``"{i}:" + shingle`` as its 32-hex string —
+    byte-identical in any engine (lexicographic min over fixed-width
+    lowercase hex == numeric min). ``portable=False``: xxhash64 — JVM
+    codegen, no hex-string allocation, for results that never cross an
+    engine boundary.
+    """
+    if portable:
+        return F.md5(F.concat(F.lit(f"{i}:"), shingle))
+    return F.xxhash64(F.lit(i), shingle)
+
+
+def band_digest(cols: list, portable: bool = True) -> Column:
+    """One LSH band key from the band's MinHash columns."""
+    if portable:
+        return F.md5(F.concat_ws("|", *cols))
+    return F.xxhash64(*cols)
+
+
 def minhash_signatures(
     df: DataFrame,
     k: int = 12,
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
+    portable: bool = True,
+    carry_sets: bool = False,
 ) -> DataFrame:
-    """k-permutation MinHash signature per doc: mh_i = min(md5(i‖shingle)).
+    """k-permutation MinHash signature per doc: mh_i = min(h_i(shingle)).
 
-    Using the 32-hex md5 *string* as the hash value keeps the signature
-    byte-identical in any engine (lexicographic min over fixed-width lowercase
-    hex == numeric min). One shuffle: groupBy(doc) with k partial mins; the
-    k hashes run in the codegen'd projection over exploded shingle rows
-    (higher-order functions over a per-row array would run interpreted and
-    re-evaluate the shingle build per hash — measured ~6× slower).
+    ``h_i`` is :func:`minhash_value`. One shuffle: groupBy(doc) with k
+    partial mins; the k hashes run in the codegen'd projection over
+    exploded shingle rows (higher-order functions over a per-row array
+    would run interpreted and re-evaluate the shingle build per hash —
+    measured ~6× slower). ``carry_sets`` adds each doc's shingle set as
+    ``shset``, riding the same shuffle.
     """
     sh = word_shingles(df, n=n, text_col=text_col, id_col=id_col)
     aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")))).alias(f"mh{i}")
+        F.min(minhash_value(i, F.col("shingle"), portable)).alias(f"mh{i}")
         for i in range(k)
     ]
+    if carry_sets:
+        aggs.append(F.collect_set("shingle").alias("shset"))
     return sh.groupBy(id_col).agg(*aggs)
 
 
@@ -237,26 +262,11 @@ def minhash_lsh_pairs(
       synthetic corpus.
     """
     rows = k // bands
-
-    if portable:
-        def h(i: int) -> Column:
-            return F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")))
-
-        def band_digest(cols: list) -> Column:
-            return F.md5(F.concat_ws("|", *cols))
-    else:
-        def h(i: int) -> Column:
-            return F.xxhash64(F.lit(i), F.col("shingle"))
-
-        def band_digest(cols: list) -> Column:
-            return F.xxhash64(*cols)
-
-    sh = word_shingles(df, n=n, text_col=text_col, id_col=id_col)
-    aggs = [F.min(h(i)).alias(f"mh{i}") for i in range(k)]
-    if carry_sets:
-        aggs.append(F.collect_set("shingle").alias("shset"))
     # one shuffle: the per-doc signature (map-side partial agg)
-    sig = sh.groupBy(id_col).agg(*aggs)
+    sig = minhash_signatures(
+        df, k=k, n=n, text_col=text_col, id_col=id_col,
+        portable=portable, carry_sets=carry_sets,
+    )
     if carry_sets:
         # materialize once: sig feeds banding AND both verify sides; lazy,
         # the three consumer stages run concurrently inside one job and
@@ -266,7 +276,9 @@ def minhash_lsh_pairs(
     band_structs = [
         F.struct(
             F.lit(b).alias("band"),
-            band_digest([F.col(f"mh{b * rows + r}") for r in range(rows)]).alias("digest"),
+            band_digest(
+                [F.col(f"mh{b * rows + r}") for r in range(rows)], portable
+            ).alias("digest"),
         )
         for b in range(bands)
     ]

@@ -14,13 +14,9 @@ generation is O(docs) + bucket-local joins — this is what survives 100×.
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-from nebula_importer_spark.operators.dedup import HEX
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -104,28 +100,14 @@ def embedding_cosine_pairs(
     )
 
 
-def _pseudo_hyperplane_component(seed: int, d: Column) -> Column:
-    """Deterministic pseudo-random weight in [-0.5, 0.5) from md5(seed:dim).
-
-    Replaces seeded RNG hyperplanes so the sketch is reproducible across
-    engines, resumes, and cluster sizes (no RNG state to checkpoint).
-    """
-    h = F.md5(F.concat(F.lit(f"hp{seed}:"), d.cast("string")))
-    # first 8 hex digits → int in [0, 2^32) → fraction
-    val = F.conv(F.substring(h, 1, 8), 16, 10).cast("double")
-    return val / F.lit(4294967296.0) - F.lit(0.5)
-
-
 def _hyperplane_weights(plane: int, dim: int) -> list:
-    """Driver-side precomputation of one pseudo-hyperplane's weights.
+    """Weights of one pseudo-hyperplane, computed once on the driver.
 
-    Bit-identical to :func:`_pseudo_hyperplane_component` (md5 is md5; the
-    8-hex-digit integer is ≤ 2³²−1, exactly representable as a double, and
-    the divide/subtract are the same IEEE ops) — but computed ONCE on the
-    driver instead of per row × per dimension × per plane on executors.
-    The dynamic path paid an interpreted md5+conv for every one of those:
-    at 2,000 docs × 64 dims × 8 planes that is 1M interpreted calls per
-    sketch pass, the dominant cost of every sign-sketch query.
+    Weight ``d`` is the first 8 hex digits of md5("hp{plane}:{d}") as a
+    fraction of 2³², minus 0.5: deterministic pseudo-random values in
+    [-0.5, 0.5) in place of seeded RNG hyperplanes, so the sketch is
+    reproducible across engines, resumes, and cluster sizes (no RNG state
+    to checkpoint). The weights reach the executors as literal arrays.
     """
     import hashlib
 
@@ -137,35 +119,29 @@ def _hyperplane_weights(plane: int, dim: int) -> list:
     ]
 
 
-def lsh_sign_sketch(vec: Column, planes: int = 8, dim: Optional[int] = None) -> Column:
+def lsh_sign_sketch(vec: Column, planes: int = 8, *, dim: int) -> Column:
     """Random-hyperplane sign sketch (SimHash-for-vectors) as an int bucket.
 
-    bit_i = 1 iff ⟨vec, plane_i⟩ ≥ 0 with pseudo-hyperplanes derived from
-    md5 — fully built-in, no UDF, no RNG.
+    bit_i = 1 iff ⟨vec, plane_i⟩ ≥ 0 with the md5-derived pseudo-hyperplanes
+    of :func:`_hyperplane_weights` — fully built-in, no UDF, no RNG.
 
-    ``dim``: when the embedding dimension is known (any real embedding
-    column is fixed-dimension), the hyperplane weights become literal
-    arrays computed once driver-side — same values, none of the per-row
-    interpreted md5 work. ``None`` keeps the fully dynamic per-row weights
-    (correct even for ragged arrays, ~10× slower).
+    ``dim`` is the embedding dimension. A vector of any other size fails
+    the query: its projections would be null-padded into bits of 0, a
+    degenerate bucket rather than an error.
     """
     sketch = None
     for i in range(planes):
-        if dim is None:
-            weights = F.transform(
-                F.sequence(F.lit(0), F.size(vec) - 1),
-                lambda d, _i=i: _pseudo_hyperplane_component(_i, d),
-            )
-        else:
-            weights = F.lit(_hyperplane_weights(i, dim))
         proj = F.aggregate(
-            F.zip_with(vec, weights, lambda x, w: x * w),
+            F.zip_with(vec, F.lit(_hyperplane_weights(i, dim)), lambda x, w: x * w),
             F.lit(0.0),
             lambda acc, v: acc + v,
         )
         bit = F.when(proj >= 0, F.lit(2**i)).otherwise(F.lit(0))
         sketch = bit if sketch is None else sketch + bit
-    return sketch.cast("int")
+    return F.when(
+        F.size(vec) != dim,
+        F.raise_error(F.lit(f"lsh_sign_sketch: vector size differs from dim={dim}")),
+    ).otherwise(sketch.cast("int"))
 
 
 def ann_lsh_topk(
@@ -175,7 +151,8 @@ def ann_lsh_topk(
     planes: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: Optional[int] = None,
+    *,
+    dim: int,
 ) -> DataFrame:
     """Approximate top-k: candidates share the sign-sketch bucket.
 
@@ -217,7 +194,8 @@ def embedding_lsh_pairs(
     multiprobe: bool = False,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: Optional[int] = None,
+    *,
+    dim: int,
 ) -> DataFrame:
     """Near-duplicate pairs by cosine ≥ threshold, sign-sketch bucketed.
 

@@ -25,7 +25,6 @@ from typing import Iterator, Union
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from nebula_importer_spark.plans.specs import EdgeSpec, Mode, NodeSpec

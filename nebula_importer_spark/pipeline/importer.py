@@ -5,13 +5,13 @@ nebula-importer.go:46-130``) loads the YAML, starts the manager (before
 hooks), imports every source × tag/edge spec, waits, then fires after hooks
 and final stats. :func:`import_config` is that flow over this engine:
 
-* each source is read once (``sources.config.read_source``) and every tag /
-  edge spec mapped from the SAME scan — the reference's one-reader-many-
-  importers fan-out (``pkg/manager/manager.go:377-407``),
+* each source is read once (``sources.config.read_source_accounted``) and
+  every tag / edge spec mapped from the SAME scan — the reference's
+  one-reader-many-importers fan-out (``pkg/manager/manager.go:377-407``),
 * per-spec output is the rendered nGQL statement batches
   (``operators.statements.assemble_statements``), optionally written to
-  ``output_path/<source_idx>_<kind>_<name>`` as parquet — the engine's
-  sink stand-in for the reference's client pool,
+  ``output_path/src<source_idx>_<spec_idx>_<kind>_<name>`` as parquet —
+  the engine's sink stand-in for the reference's client pool,
 * hooks are driver-side statements. The reference executes them against
   NebulaGraph and aborts on failure (``pkg/manager/manager.go:288-334``);
   here anything that parses as Spark SQL runs (and failures abort the
@@ -66,14 +66,20 @@ class SpecResult:
     applied_path: Optional[str] = None  # apply-mode: the mutated table
     table_rows: Optional[int] = None  # apply-mode: post-state row count
     #: apply-mode UPDATE: batch rows dropped because their key is absent
-    #: from the table — the reference surfaces each as a server-side error
-    #: and counts it failed (pkg/importer/importer.go:110-128)
+    #: from the table, counted per row (the reference fails the whole
+    #: statement batch that holds one, pkg/importer/importer.go:110-128)
     n_failed: int = 0
 
 
 @dataclass
 class SourceStat:
-    """Per-source parse accounting (stats.FailedRecords analog)."""
+    """Per-source parse accounting (stats.FailedRecords analog).
+
+    Parse failures are counted per row, as the reference's reader does.
+    Apply-mode UPDATE failures (:attr:`SpecResult.n_failed`) are counted per
+    row too, where the reference counts every record of the failed
+    statement batch (``pkg/importer/importer.go:110-128``).
+    """
 
     source: str
     raw_rows: Optional[int]  # None: typed source, no per-row parse step
@@ -207,6 +213,8 @@ def import_config(
     """
     if isinstance(cfg, str):
         cfg = load_config(cfg)
+    else:  # load_config validates; a hand-built config may not be
+        cfg.validate()
     interval = (
         cfg.stats_interval_sec if stats_interval_sec is None else stats_interval_sec
     )
@@ -223,20 +231,14 @@ def import_config(
         for i, src in enumerate(cfg.sources):
             # failed-record accounting rides the import's own scan: the
             # observe node below counts raw + parsed when the first spec
-            # job materializes the source — NO extra read passes (the
-            # count-based approach cost two full scans per source; the
-            # reference accumulates stats during its single read)
+            # job materializes the source (the reference accumulates stats
+            # during its single read). validate() guarantees a spec reads it.
             records, obs, counts_raw = read_source_accounted(
                 spark, src, base_dir=base_dir
             )
             specs = [("tag", s) for s in src.nodes] + [
                 ("edge", s) for s in src.edges
             ]
-            if not specs:  # nothing will scan the source: no stats to take
-                result.sources.append(
-                    SourceStat(source=src.path or "sql", raw_rows=None, parsed_rows=0)
-                )
-                continue
             if apply_path is not None:
                 from pyspark.sql import functions as F
 
@@ -250,10 +252,10 @@ def import_config(
             if len(specs) > 1:
                 records = records.persist()  # one scan, many importers
             try:
-                for kind, spec in specs:
+                for j, (kind, spec) in enumerate(specs):
                     result.specs.append(
                         _run_spec(
-                            spark, records, src, i, kind, spec,
+                            spark, records, src, f"{i}_{j}", kind, spec,
                             batch=src.batch or cfg.batch,
                             output_path=output_path,
                             apply_path=apply_path,
@@ -288,7 +290,7 @@ def _run_spec(
     spark: SparkSession,
     records: DataFrame,
     src: SourceConfig,
-    src_idx: int,
+    spec_key: str,
     kind: str,
     spec: Union[NodeSpec, EdgeSpec],
     batch: int,
@@ -307,7 +309,8 @@ def _run_spec(
     stmts = assemble_statements(values.drop(_SEQ_COL), spec, batch=batch)
     out = None
     if output_path is not None:
-        out = f"{output_path}/src{src_idx}_{kind}_{spec.name}"
+        # the spec's position keeps two specs of one kind and name apart
+        out = f"{output_path}/src{spec_key}_{kind}_{spec.name}"
         stmts.write.mode("overwrite").parquet(out)
         stmts = spark.read.parquet(out)
         n_statements = stmts.count()
@@ -401,10 +404,11 @@ def _apply_spec(
 
     n_failed = 0
     if spec.mode == Mode.UPDATE:
-        # UPDATE drops batch rows whose key is absent; the reference counts
-        # each as a failed statement (importer.go:110-128) — surface the
-        # count so the CLI exit contract covers it. One anti-join over the
-        # persisted batch, paid only on the UPDATE path.
+        # UPDATE drops batch rows whose key is absent; each counts as one
+        # failed row (the reference fails the statement batch holding it,
+        # importer.go:110-128) — surface the count so the CLI exit contract
+        # covers it. One anti-join over the persisted batch, paid only on
+        # the UPDATE path.
         from nebula_importer_spark.operators.merge import unmatched_update_rows
 
         n_failed = unmatched_update_rows(table, batch, key_cols).count()

@@ -27,19 +27,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("bucket", T.IntegerType(), False),
-        T.StructField("min_doc_id", T.StringType(), True),
-        T.StructField("max_doc_id", T.StringType(), True),
-        T.StructField("n_docs", T.LongType(), False),
-        T.StructField("n_triples", T.LongType(), False),
-        T.StructField("wall_sec", T.DoubleType(), False),
-        T.StructField("run_id", T.StringType(), False),
-    ]
-)
 
 
 def with_bucket(df: DataFrame, n_buckets: int, id_col: str = "doc_id") -> DataFrame:
@@ -64,16 +51,6 @@ class Checkpoint:
         except Exception:  # noqa: BLE001 — first run: no checkpoint yet
             return []
         return [r.bucket for r in df.select("bucket").dropDuplicates().collect()]
-
-    def filter_pending(
-        self, corpus: DataFrame, n_buckets: int, id_col: str = "doc_id"
-    ) -> DataFrame:
-        """Drop docs whose bucket already has a lineage row (resume)."""
-        done = self.completed_buckets(corpus.sparkSession)
-        bucketed = with_bucket(corpus, n_buckets, id_col)
-        if not done:
-            return bucketed
-        return bucketed.where(~F.col("bucket").isin(done))
 
     def record(
         self,

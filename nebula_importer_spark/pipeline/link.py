@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from nebula_importer_spark.operators.dedup import band_digest, minhash_value
+
 
 def _char_shingles(col: F.Column, n: int = 3) -> F.Column:
     """Distinct character n-grams of a (short) surface form, column-native."""
@@ -32,19 +34,15 @@ def _char_shingles(col: F.Column, n: int = 3) -> F.Column:
 
 
 def _minhash_bands(sh: F.Column, k: int = 8, rows: int = 1) -> F.Column:
-    # rows=1 (any-minhash-agrees) favors recall: surface forms are short, so
-    # even close typo variants share few shingles; the exact-Jaccard scoring
-    # pass downstream restores precision.
-    """Array of band digests from md5-minhash over a shingle array."""
-    mins = [
-        F.array_min(F.transform(sh, lambda s: F.md5(F.concat(F.lit(f"{i}:"), s))))
-        for i in range(k)
-    ]
+    """Array of band digests from md5-minhash over a shingle array.
+
+    rows=1 (any-minhash-agrees) favors recall: surface forms are short, so
+    even close typo variants share few shingles; the exact-Jaccard scoring
+    pass downstream restores precision.
+    """
+    mins = [F.array_min(F.transform(sh, lambda s: minhash_value(i, s))) for i in range(k)]
     return F.array(
-        *[
-            F.md5(F.concat_ws("|", *mins[b * rows : (b + 1) * rows]))
-            for b in range(k // rows)
-        ]
+        *[band_digest(mins[b * rows : (b + 1) * rows]) for b in range(k // rows)]
     )
 
 
@@ -108,8 +106,3 @@ def link_mentions(
     )
 
     return exact.unionByName(fuzzy.select(*exact.columns))
-
-
-def entity_doc_edges(linked: DataFrame) -> DataFrame:
-    """(doc_id, entity, n) mention edges — one shuffle, map-side combined."""
-    return linked.groupBy("doc_id", "entity").agg(F.sum("n").cast("long").alias("n"))

@@ -1,10 +1,9 @@
-"""Materialize stage: deduplicated vertex/edge/triple tables + statements.
+"""Materialize stage: predicate statistics over the deduplicated triples.
 
-The DataFrame analog of the reference's server-side dedup flags
-(``IGNORE_EXISTED_INDEX`` / ``IF NOT EXISTS``, ``/root/reference/pkg/spec/v3/
-node.go:98-105``): vertices dedup on vid, edges on (src, dst, rank).
-Statement text (INSERT VERTEX/EDGE) is rendered only for golden-parity
-checks — the engine's real output is the tables.
+The triple dedup itself (the DataFrame analog of the reference's
+server-side dedup flags, ``IGNORE_EXISTED_INDEX`` / ``IF NOT EXISTS``,
+``pkg/spec/v3/node.go:98-105``) is one ``dropDuplicates`` on
+(subj, pred, obj) in :func:`nebula_importer_spark.pipeline.run.run_pipeline`.
 
 Skew: rdf:type-like predicates concentrate on few objects; predicate-level
 statistics use salted two-phase aggregation (explicit salt column → partial
@@ -16,26 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-TRIPLE_COLS = ("subj", "pred", "obj")
-
-
-def dedup_vertices(vertices: DataFrame, vid_col: str = "vid") -> DataFrame:
-    return vertices.dropDuplicates([vid_col])
-
-
-def dedup_edges(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    rank_col: str | None = None,
-) -> DataFrame:
-    keys = [src_col, dst_col] + ([rank_col] if rank_col else [])
-    return edges.dropDuplicates(keys)
-
-
-def dedup_triples(triples: DataFrame) -> DataFrame:
-    return triples.dropDuplicates(list(TRIPLE_COLS))
 
 
 def predicate_stats(

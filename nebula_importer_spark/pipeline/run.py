@@ -68,7 +68,6 @@ class PipelineResult:
     canonical: DataFrame
     stats: DataFrame
     lineage: Optional[DataFrame] = None
-    timings: dict = field(default_factory=dict)
     progress: list = field(default_factory=list)  # ProgressReporter rows
     _cached: list = field(default_factory=list)   # persisted handles
 
@@ -128,7 +127,6 @@ def run_pipeline(
     progress reporter; its rows land in ``PipelineResult.progress``.
     """
     t0 = time.time()
-    timings: dict[str, float] = {}
     reporter = None
     if stats_interval_sec is not None:
         from nebula_importer_spark.pipeline.progress import ProgressReporter
@@ -181,7 +179,6 @@ def run_pipeline(
     # text is no longer referenced by any live plan — release it now rather
     # than at result-consumption time (it is the widest cache of the run)
     flat.unpersist()
-    timings["canonicalize"] = time.time() - t0
 
     # per-document work: restrict to pending buckets (resume + wave filter)
     pending = corpus
@@ -200,7 +197,6 @@ def run_pipeline(
     # entity-tag and mention-edge branches (one extract pass, not two).
     covered = set(gazetteer) <= set(alias_map)
     linked = link_mentions(mentions, alias_df, skip_fuzzy=covered).persist()
-    timings["extract_link"] = time.time() - t0
 
     pending_canon = canon.join(pending.select("doc_id"), "doc_id")
     doc_subj = F.concat(F.lit("doc:"), F.col("canonical_id"))
@@ -272,12 +268,11 @@ def run_pipeline(
 
     _exec_hooks(spark, after_hooks)
 
-    timings["total"] = time.time() - t0
     if reporter is not None:
         reporter.stop()
     return PipelineResult(
         triples=triples, canonical=canon, stats=stats,
-        lineage=lineage_rows, timings=timings,
+        lineage=lineage_rows,
         progress=reporter.rows if reporter is not None else [],
         _cached=[corpus, spans, linked, canon],
     )

@@ -7,7 +7,6 @@ from nebula_importer_spark.plans.specs import (
     NodeSpec,
     PropSpec,
     RankSpec,
-    GraphSpec,
 )
 
 __all__ = [
@@ -17,5 +16,4 @@ __all__ = [
     "NodeSpec",
     "PropSpec",
     "RankSpec",
-    "GraphSpec",
 ]

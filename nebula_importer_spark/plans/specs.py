@@ -242,26 +242,3 @@ class EdgeSpec:
             p.validate()
         if self.mode in (Mode.UPDATE, Mode.UPSERT) and not self.props:
             raise SpecValidationError(f"{self.mode} edge requires props")
-
-
-@dataclass
-class GraphSpec:
-    """A named space with tag + edge specs (``pkg/spec/v3/graph.go:9-13``)."""
-
-    name: str
-    nodes: List[NodeSpec] = field(default_factory=list)
-    edges: List[EdgeSpec] = field(default_factory=list)
-
-    def complete(self) -> None:
-        for n in self.nodes:
-            n.complete()
-        for e in self.edges:
-            e.complete()
-
-    def validate(self) -> None:
-        if not self.name:
-            raise SpecValidationError("graph without space name")
-        for n in self.nodes:
-            n.validate()
-        for e in self.edges:
-            e.validate()

@@ -2,12 +2,10 @@
 
 from nebula_importer_spark.sources.csv import (
     read_records_csv,
-    read_records_csv_accounted,
     records_from_columns,
 )
 
 __all__ = [
     "read_records_csv",
-    "read_records_csv_accounted",
     "records_from_columns",
 ]

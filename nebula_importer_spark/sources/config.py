@@ -20,8 +20,8 @@ that exact format into this engine's vocabulary:
 * ``client`` (connection pool/retry) and ``log`` are intentionally ignored:
   the Spark runtime owns scheduling, retries, and logging (COVERAGE.md §2.5).
 
-Nothing here executes I/O except :func:`read_source`; loading is pure
-parsing, so configs validate fast and driver-side.
+Nothing here executes I/O except :func:`read_source_accounted`; loading is
+pure parsing, so configs validate fast and driver-side.
 """
 
 from __future__ import annotations
@@ -33,7 +33,7 @@ from typing import List, Optional
 
 import yaml
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from nebula_importer_spark.plans.specs import (
     EdgeSpec,
@@ -41,7 +41,6 @@ from nebula_importer_spark.plans.specs import (
     NodeSpec,
     PropSpec,
     RankSpec,
-    SpecValidationError,
 )
 
 
@@ -104,6 +103,9 @@ class ImporterConfig:
 
     def validate(self) -> None:
         for s in self.sources:
+            if not (s.nodes or s.edges):
+                # nothing would scan it: its rows would go unread, uncounted
+                raise ConfigError(f"source {s.path or 'sql'!r} has no tags or edges")
             for spec in (*s.nodes, *s.edges):
                 spec.complete()
                 spec.validate()
@@ -274,45 +276,15 @@ def load_config(path_or_text: str) -> ImporterConfig:
     return cfg
 
 
-def read_source(
-    spark: SparkSession, src: SourceConfig, base_dir: Optional[str] = None
-) -> DataFrame:
-    """Read one configured source into a ``record: array<string>`` DataFrame."""
-    from nebula_importer_spark.sources.csv import read_records_csv
-
-    if src.kind == "sql":
-        from nebula_importer_spark.sources.jdbc import (
-            options_from_sql_config,
-            read_records_jdbc,
-        )
-
-        sql = src.sql or {}
-        fields = (sql.get("dbTable") or {}).get("fields") or None
-        return read_records_jdbc(
-            spark, columns=fields, jdbc_options=options_from_sql_config(sql)
-        )
-    path = src.path
-    if base_dir is not None and "://" not in path and not os.path.isabs(path):
-        path = os.path.join(base_dir, path)
-    return read_records_csv(
-        spark,
-        path,
-        delimiter=src.csv.delimiter,
-        comment=src.csv.comment,
-        with_header=src.csv.with_header,
-        lazy_quotes=src.csv.lazy_quotes,
-    )
-
-
 def read_source_accounted(
     spark: SparkSession, src: SourceConfig, base_dir: Optional[str] = None
 ):
-    """Read one source with single-scan failed-row accounting.
+    """Read one configured source with single-scan failed-row accounting.
 
     Returns ``(records, observation, counts_raw)``:
 
-    * ``records`` — the usual ``record: array<string>`` DataFrame, malformed
-      rows excluded (same rows :func:`read_source` yields);
+    * ``records`` — a ``record: array<string>`` DataFrame, malformed rows
+      excluded;
     * ``observation`` — :class:`pyspark.sql.Observation` whose ``.get``
       yields ``{"raw": …, "parsed": …}`` after any action has run over
       ``records`` (the accounting rides the import's own scan — no extra
@@ -326,7 +298,16 @@ def read_source_accounted(
     from pyspark.sql import functions as F
 
     if src.kind == "sql":
-        records = read_source(spark, src, base_dir=base_dir)
+        from nebula_importer_spark.sources.jdbc import (
+            options_from_sql_config,
+            read_records_jdbc,
+        )
+
+        sql = src.sql or {}
+        fields = (sql.get("dbTable") or {}).get("fields") or None
+        records = read_records_jdbc(
+            spark, columns=fields, jdbc_options=options_from_sql_config(sql)
+        )
         obs = Observation()
         records = records.observe(
             obs,
@@ -335,12 +316,12 @@ def read_source_accounted(
         )
         return records, obs, False
 
-    from nebula_importer_spark.sources.csv import read_records_csv_accounted
+    from nebula_importer_spark.sources.csv import read_records_csv
 
     path = src.path
     if base_dir is not None and "://" not in path and not os.path.isabs(path):
         path = os.path.join(base_dir, path)
-    records, obs = read_records_csv_accounted(
+    records, obs = read_records_csv(
         spark,
         path,
         delimiter=src.csv.delimiter,
@@ -349,30 +330,3 @@ def read_source_accounted(
         lazy_quotes=src.csv.lazy_quotes,
     )
     return records, obs, True
-
-
-def count_source_rows(
-    spark: SparkSession, src: SourceConfig, base_dir: Optional[str] = None
-) -> Optional[int]:
-    """Physical row count of one source, malformed rows included.
-
-    ``None`` for SQL sources — JDBC rows arrive typed, there is no parse
-    step that can fail per-row. Used by the importer's failed-record
-    accounting (the reference's ``stats.IsFailed`` exit contract,
-    ``pkg/cmd/nebula-importer.go:118-130``).
-    """
-    from nebula_importer_spark.sources.csv import count_raw_rows
-
-    if src.kind == "sql":
-        return None
-    path = src.path
-    if base_dir is not None and "://" not in path and not os.path.isabs(path):
-        path = os.path.join(base_dir, path)
-    return count_raw_rows(
-        spark,
-        path,
-        delimiter=src.csv.delimiter,
-        comment=src.csv.comment,
-        with_header=src.csv.with_header,
-        lazy_quotes=src.csv.lazy_quotes,
-    )

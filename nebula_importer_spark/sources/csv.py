@@ -28,22 +28,33 @@ from pyspark.sql import functions as F
 from nebula_importer_spark.operators.mapping import RECORD_COL
 
 
-#: Name of the corrupt-record marker column used by the accounted reader.
+#: Name of the corrupt-record marker column used by the batch reader.
 CORRUPT_COL = "_nis_corrupt_record"
+
+_PRUNING_CONF = "spark.sql.csv.parser.columnPruning.enabled"
 
 
 def _reader(
-    spark: SparkSession,
+    base,
     mode: str,
-    delimiter: str,
-    comment: str,
-    with_header: bool,
-    lazy_quotes: bool,
-    multi_line: bool,
+    delimiter: str = ",",
+    comment: str = "",
+    with_header: bool = False,
+    lazy_quotes: bool = False,
+    multi_line: bool = False,
 ):
-    """The shared option block: Go encoding/csv-compatible parse settings."""
+    """The one CSV option block: Go encoding/csv-compatible parse settings.
+
+    ``base`` is ``spark.read`` (batch) or a schema'd ``spark.readStream``
+    (streaming); both reads parse a file identically, only ``mode`` differs.
+    ``escape`` is pinned to ``"`` (RFC4180 double-quote doubling) because
+    Go's encoding/csv has no backslash escape — Spark's default ``\\``
+    escape would mis-parse fields like ``"No11\\"``. ``multi_line=True``
+    enables quoted fields containing newlines (encoding/csv handles these
+    natively; Spark needs the whole-file parse mode).
+    """
     reader = (
-        spark.read.option("sep", delimiter)
+        base.option("sep", delimiter)
         .option("header", with_header)
         .option("inferSchema", False)
         .option("mode", mode)
@@ -69,72 +80,45 @@ def read_records_csv(
     with_header: bool = False,
     lazy_quotes: bool = False,
     multi_line: bool = False,
-    n_columns: Optional[int] = None,
-) -> DataFrame:
-    """Read CSV into a DataFrame with one ``record: array<string>`` column.
-
-    Malformed rows are dropped (mode=DROPMALFORMED), mirroring the
-    reference's skip-and-continue on CSV parse errors (batch.go:119-123).
-    ``escape`` is pinned to ``"`` (RFC4180 double-quote doubling) because
-    Go's encoding/csv has no backslash escape — Spark's default ``\\``
-    escape would mis-parse fields like ``"No11\\"``. ``multi_line=True``
-    enables quoted fields containing newlines (encoding/csv handles these
-    natively; Spark needs the whole-file parse mode).
-    """
-    df = _reader(
-        spark, "DROPMALFORMED", delimiter, comment, with_header, lazy_quotes, multi_line
-    ).csv(path)
-    if n_columns is not None:
-        df = df.select(df.columns[:n_columns])
-    return records_from_columns(df, df.columns)
-
-
-def read_records_csv_accounted(
-    spark: SparkSession,
-    path: str,
-    delimiter: str = ",",
-    comment: str = "",
-    with_header: bool = False,
-    lazy_quotes: bool = False,
-    multi_line: bool = False,
 ):
-    """Single-scan CSV read WITH failed-row accounting.
+    """Single-scan CSV read with failed-row accounting.
 
-    Returns ``(records, observation)``: ``records`` carries the usual
-    ``record: array<string>`` column and contains exactly the rows the
-    DROPMALFORMED reader keeps; ``observation``
-    (:class:`pyspark.sql.Observation`) yields ``{"raw": …, "parsed": …}``
-    once ANY action has executed over ``records`` — the accounting rides the
-    scan the import itself performs, instead of the two extra full passes
-    the count-based approach costs (the reference accumulates its stats
-    during its single read, ``pkg/stats/stats.go:16``; VERDICT r4 "What's
-    wrong" #4).
+    Returns ``(records, observation)``: ``records`` carries the
+    ``record: array<string>`` column with malformed rows skipped, mirroring
+    the reference's skip-and-continue on CSV parse errors
+    (batch.go:119-123); ``observation`` (:class:`pyspark.sql.Observation`)
+    yields ``{"raw": …, "parsed": …}`` once ANY action has executed over
+    ``records`` — the accounting rides the scan the import itself performs
+    (the reference accumulates its stats during its single read,
+    ``pkg/stats/stats.go:16``).
 
     Mechanics: a PERMISSIVE read (keeps every row) with an explicit
     corrupt-record column; malformed rows are those with the marker set,
     counted by an ``observe`` node below the malformed-row filter. Requires
-    ``spark.sql.csv.parser.columnPruning.enabled=false`` (set here and in
-    :func:`nebula_importer_spark.session.get_spark`): under pruning Spark
-    judges malformedness only on referenced columns, which both diverges
-    from Go encoding/csv's full-row validation and leaves the marker
-    un-populated. The schema probe below reads only the first line of the
-    first file — plan-time metadata, not a data scan.
+    ``spark.sql.csv.parser.columnPruning.enabled=false``, which
+    :func:`nebula_importer_spark.session.get_spark` sets: under pruning
+    Spark judges malformedness only on referenced columns, which both
+    diverges from Go encoding/csv's full-row validation and leaves the
+    marker un-populated. The schema probe below reads only the first line
+    of the first file — plan-time metadata, not a data scan.
     """
     from pyspark.sql import Observation
     from pyspark.sql.types import StringType, StructField, StructType
 
-    spark.conf.set("spark.sql.csv.parser.columnPruning.enabled", "false")
-    probe = _reader(
-        spark, "PERMISSIVE", delimiter, comment, with_header, lazy_quotes, multi_line
-    ).csv(path)
+    if spark.conf.get(_PRUNING_CONF, "true").lower() != "false":
+        raise RuntimeError(
+            f"{_PRUNING_CONF} must be false for CSV reads (malformed rows "
+            "would go uncounted); build the session with "
+            "nebula_importer_spark.session.get_spark"
+        )
+    opts = (delimiter, comment, with_header, lazy_quotes, multi_line)
+    probe = _reader(spark.read, "PERMISSIVE", *opts).csv(path)
     data_cols = probe.columns
     schema = StructType(
         list(probe.schema.fields) + [StructField(CORRUPT_COL, StringType())]
     )
     df = (
-        _reader(
-            spark, "PERMISSIVE", delimiter, comment, with_header, lazy_quotes, multi_line
-        )
+        _reader(spark.read, "PERMISSIVE", *opts)
         .schema(schema)
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .csv(path)
@@ -158,37 +142,6 @@ def read_records_csv_accounted(
         keep = keep & (F.length(F.coalesce(F.col(first), F.lit(""))) >= 0)
     records = df.where(keep).drop(CORRUPT_COL)
     return records_from_columns(records, data_cols), obs
-
-
-def count_raw_rows(
-    spark: SparkSession,
-    path: str,
-    delimiter: str = ",",
-    comment: str = "",
-    with_header: bool = False,
-    lazy_quotes: bool = False,
-    multi_line: bool = False,
-) -> int:
-    """Total data rows the source physically contains, malformed included.
-
-    A PERMISSIVE re-read with the same parse options: PERMISSIVE never drops
-    a row, so its count is the denominator for the reference's failed-record
-    accounting (``stats.FailedRecords``, ``pkg/stats/stats.go:16``) —
-    ``failed = raw − parsed``. Headers, comment lines, and blank lines are
-    excluded identically on both reads, and the approach survives globs and
-    ``multiLine`` quoting where raw line counting would not.
-
-    Note the parsed side must force an actual parse: Spark optimizes a bare
-    ``count()`` on a CSV scan to a row count WITHOUT field parsing, so
-    DROPMALFORMED never fires and the counts silently agree — count the
-    DROPMALFORMED frame through a projection of its record column instead.
-
-    Standalone verifier; the import path itself uses the zero-extra-scan
-    :func:`read_records_csv_accounted` instead.
-    """
-    return _reader(
-        spark, "PERMISSIVE", delimiter, comment, with_header, lazy_quotes, multi_line
-    ).csv(path).count()
 
 
 def records_from_columns(df: DataFrame, cols: Optional[Sequence[str]] = None) -> DataFrame:

@@ -23,7 +23,7 @@ from pyspark.sql.streaming import StreamingQuery
 from nebula_importer_spark.operators.mapping import node_values, edge_values
 from nebula_importer_spark.operators.triples import edge_triples, node_triples
 from nebula_importer_spark.plans.specs import EdgeSpec, NodeSpec
-from nebula_importer_spark.sources.csv import records_from_columns
+from nebula_importer_spark.sources.csv import _reader, records_from_columns
 
 
 def stream_records_csv(
@@ -37,17 +37,16 @@ def stream_records_csv(
     """readStream over a CSV directory → record DataFrame.
 
     Streaming sources need an explicit schema: ``n_columns`` string columns,
-    exactly the reference's ``[]string`` record contract.
+    exactly the reference's ``[]string`` record contract. Parsing uses the
+    batch reader's option block, so a file streams as it would batch-read;
+    malformed rows are skipped (DROPMALFORMED).
     """
     schema = T.StructType(
         [T.StructField(f"_c{i}", T.StringType(), True) for i in range(n_columns)]
     )
-    reader = (
-        spark.readStream.schema(schema)
-        .option("sep", delimiter)
-        .option("header", with_header)
-        .option("mode", "DROPMALFORMED")
-        .option("emptyValue", "")
+    reader = _reader(
+        spark.readStream.schema(schema), "DROPMALFORMED", delimiter,
+        with_header=with_header,
     )
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

@@ -35,7 +35,7 @@ def test_course_tag_quoted_vids_and_unicode(spark):
         id=NodeIDSpec(index=0),
         props=[PropSpec("name", "string", 1), PropSpec("credits", "int", 2)],
     )
-    df = read_records_csv(spark, f"{BASE}/course.csv")
+    df = read_records_csv(spark, f"{BASE}/course.csv")[0]
     frags = set(_fragments(df, spec))
     assert '"x101":("Math", 3)' in frags
     assert '"z103":("Chinese", 1)' in frags            # quoted VID unwrapped
@@ -49,7 +49,7 @@ def test_course_concat_vid(spark):
         id=NodeIDSpec(type="string", concat_items=["c1", 0, "c2", 1, "2"]),
         props=[PropSpec("name", "string", 1), PropSpec("credits", "int", 2)],
     )
-    df = read_records_csv(spark, f"{BASE}/course.csv")
+    df = read_records_csv(spark, f"{BASE}/course.csv")[0]
     frags = set(_fragments(df, spec))
     assert '"c1x101c2Math2":("Math", 3)' in frags
     assert '"c1z103c2Chinese2":("Chinese", 1)' in frags
@@ -57,7 +57,7 @@ def test_course_concat_vid(spark):
 
 def test_student_same_tag_reordered_props(spark):
     """G9 fan-out: one scan feeds the same tag twice with reordered props."""
-    df = read_records_csv(spark, f"{BASE}/student.csv").persist()
+    df = read_records_csv(spark, f"{BASE}/student.csv")[0].persist()
     s1 = NodeSpec(
         name="student",
         id=NodeIDSpec(concat_items=["student_", 0]),
@@ -82,7 +82,7 @@ def test_follow_rank_and_noprops_and_glob(spark):
         rank=RankSpec(index=2),
         props=[PropSpec("likeness", "double", 3)],
     )
-    df = read_records_csv(spark, f"{BASE}/follow.csv")
+    df = read_records_csv(spark, f"{BASE}/follow.csv")[0]
     frags = set(_fragments(df, rank_spec))
     assert '"x200"->"y201"@0:(92.5)' in frags
     assert '"y201"->"z202"@2:(93.2)' in frags
@@ -91,7 +91,7 @@ def test_follow_rank_and_noprops_and_glob(spark):
     nf = set(_fragments(df, noprops))
     assert '"x200"->"y201":()' in nf
 
-    gdf = read_records_csv(spark, f"{BASE}/glob-follow-*.csv")
+    gdf = read_records_csv(spark, f"{BASE}/glob-follow-*.csv")[0]
     gf = set(_fragments(gdf, rank_spec))
     assert '"y201"->"z202"@1:(96.2)' in gf and len(gf) == 4
 
@@ -104,7 +104,7 @@ def test_follow_delimiter_header_shuffled_columns(spark):
         rank=RankSpec(index=3),
         props=[PropSpec("likeness", "double", 1)],
     )
-    df = read_records_csv(spark, f"{BASE}/follow-delimiter.csv", delimiter="|", with_header=True)
+    df = read_records_csv(spark, f"{BASE}/follow-delimiter.csv", delimiter="|", with_header=True)[0]
     frags = set(_fragments(df, spec))
     # withHeader skips the FIRST row (x201|…) even though it is data-shaped —
     # exactly what the reference reader does (csv.go:66-76)
@@ -141,7 +141,7 @@ BASIC_EDGE = EdgeSpec(
 
 
 def test_basic_type_nullable_default_alternative_matrix(spark):
-    df = read_records_csv(spark, f"{BASE}/basic_type_test.csv", n_columns=6).persist()
+    df = read_records_csv(spark, f"{BASE}/basic_type_test.csv")[0].persist()
     tag = {f.split(":")[0]: f for f in _fragments(df, BASIC_TAG)}
     assert tag['"b1"'] == '"b1":(true, -1, -2.2, -3.0, "str")'
     # b5: f/d pick ints → float render appends .0
@@ -174,7 +174,7 @@ def test_date_time_datetime_timestamp_rendering(spark):
             PropSpec("c4", "timestamp", 4, nullable=True),
         ],
     )
-    df = read_records_csv(spark, f"{BASE}/date_test.csv", n_columns=5)
+    df = read_records_csv(spark, f"{BASE}/date_test.csv")[0]
     tag = {f.split(":")[0]: f for f in _fragments(df, spec)}
     assert tag['"d1"'] == (
         '"d1":(DATE("2020-01-01"), TIME("18:28:23.284"), '
@@ -199,7 +199,7 @@ def test_geography_wkt_passthrough(spark):
             PropSpec("only_polygon", "geography(polygon)", 4, nullable=True),
         ],
     )
-    df = read_records_csv(spark, f"{BASE}/geography_test.csv", n_columns=5)
+    df = read_records_csv(spark, f"{BASE}/geography_test.csv")[0]
     tag = {f.split(":")[0]: f for f in _fragments(df, spec)}
     assert 'ST_GeogFromText("POINT (-82.3764154 42.6452196)")' in tag['"g1"']
     assert 'ST_GeogFromText("Point(3 8)")' in tag['"g1"']  # quoted cell unwrapped
@@ -219,7 +219,7 @@ def test_course_with_header_multiline_quoted_field(spark):
     )
     df = read_records_csv(
         spark, f"{BASE}/course-with-header.csv", with_header=True, multi_line=True
-    )
+    )[0]
     frags = set(_fragments(df, spec))
     # building-name field: No11\nB\ — \n escaped in rendered literal,
     # backslash doubled (Go strconv.Quote rules)
@@ -228,7 +228,7 @@ def test_course_with_header_multiline_quoted_field(spark):
 
 
 def test_lazy_quotes_rows_survive(spark):
-    df = read_records_csv(spark, f"{BASE}/course-lazy-quotes.csv", lazy_quotes=True, n_columns=4)
+    df = read_records_csv(spark, f"{BASE}/course-lazy-quotes.csv", lazy_quotes=True)[0]
     rows = df.count()
     # Go lazyQuotes accepts all 7; Spark's STOP_AT_CLOSING_QUOTE keeps ≥5
     # (documented divergence for pathological bare-quote rows)
@@ -248,7 +248,7 @@ def test_batch_2_statement_counts(spark):
         src=NodeIDSpec(index=0), dst=NodeIDSpec(index=1),
         props=[PropSpec("grade", "int", 2)],
     )
-    df = read_records_csv(spark, f"{BASE}/choose.csv")
+    df = read_records_csv(spark, f"{BASE}/choose.csv")[0]
     stmts = assemble_statements(edge_values(df, spec).coalesce(1), spec, batch=2).collect()
     assert len(stmts) == 2  # 4 rows / batch 2
     assert all(s.statement.startswith("INSERT EDGE IGNORE_EXISTED_INDEX `choose`(`grade`) VALUES ") for s in stmts)
@@ -265,7 +265,7 @@ def test_cases_int_vid_rendering(spark):
         id=NodeIDSpec(index=0, type="int"),
         props=[PropSpec("name", "string", 1), PropSpec("credits", "int", 2)],
     )
-    df = read_records_csv(spark, f"{INT_BASE}/course.csv")
+    df = read_records_csv(spark, f"{INT_BASE}/course.csv")[0]
     frags = set(_fragments(df, spec))
     assert '0:("Math", 3)' in frags
     assert '2:("Chinese", 1)' in frags  # "2" quoted in CSV → bare int VID

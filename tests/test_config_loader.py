@@ -17,7 +17,7 @@ from nebula_importer_spark.plans.specs import Mode, NodeSpec
 from nebula_importer_spark.sources.config import (
     ConfigError,
     load_config,
-    read_source,
+    read_source_accounted,
 )
 from nebula_importer_spark.sources.jdbc import options_from_sql_config
 
@@ -64,7 +64,7 @@ def test_cases_yaml_replays_course_fragments(spark):
         by_path.setdefault(s.path, []).append(s)
 
     course = by_path["./course.csv"][0]
-    df = read_source(spark, course, base_dir=CASES_DIR)
+    df = read_source_accounted(spark, course, base_dir=CASES_DIR)[0]
     spec = course.nodes[0]
     vals = node_values(df, spec)
     frags = {r.fragment for r in vals.collect()}
@@ -86,7 +86,7 @@ def test_cases_yaml_replays_follow_edge_with_rank(spark):
         s for s in cfg.sources
         if s.path == "./follow.csv" and s.edges and s.edges[0].rank is not None
     )
-    df = read_source(spark, follow, base_dir=CASES_DIR)
+    df = read_source_accounted(spark, follow, base_dir=CASES_DIR)[0]
     frags = {r.fragment for r in edge_values(df, follow.edges[0]).collect()}
     assert '"x200"->"y201"@0:(92.5)' in frags
     assert '"y201"->"z202"@2:(93.2)' in frags
@@ -96,7 +96,7 @@ def test_cases_yaml_delimiter_and_header(spark):
     cfg = load_config(CASES)
     src = next(s for s in cfg.sources if s.path == "./follow-delimiter.csv")
     assert src.csv.delimiter == "|" and src.csv.with_header
-    df = read_source(spark, src, base_dir=CASES_DIR)
+    df = read_source_accounted(spark, src, base_dir=CASES_DIR)[0]
     frags = {r.fragment for r in edge_values(df, src.edges[0]).collect()}
     assert frags == {
         '"student_y200"->"student_x201"@1:(85.6)',
@@ -128,6 +128,8 @@ def test_bad_configs_raise():
         load_config("sources:\n  - tags:\n    - name: t\n      id: {index: 0}\n")
     with pytest.raises(ConfigError):
         load_config("manager:\n  statsInterval: nonsense\n")
+    with pytest.raises(ConfigError):  # a source no tag or edge reads
+        load_config("sources:\n  - path: ./x.csv\n")
 
 
 def test_duration_and_defaults():

@@ -27,6 +27,9 @@ SUBSET = [
     "text_quality",
     "dedup_ngram_jaccard",
     "dedup_simhash",
+    "dedup_minhash_lsh",
+    "dedup_embedding_lsh",
+    "ann_lsh_topk",
     "kg_skew_twophase",
     "kg_canonicalize_lsh",
     "kg_pagerank",

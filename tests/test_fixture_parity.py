@@ -34,15 +34,15 @@ def person_records(spark, tmp_path_factory):
     lines = ["# I'm comment", PERSON_CSV_LINES[0], "# another comment", *PERSON_CSV_LINES[1:]]
     p.write_text("\n".join(lines) + "\n")
     return read_records_csv(
-        spark, str(p), delimiter="|", comment="#", n_columns=8
-    ).persist()
+        spark, str(p), delimiter="|", comment="#"
+    )[0].persist()
 
 
 @pytest.fixture(scope="module")
 def knows_records(spark, tmp_path_factory):
     p = tmp_path_factory.mktemp("fx2") / "knows.csv"
     p.write_text("\n".join(KNOWS_CSV_LINES) + "\n")
-    return read_records_csv(spark, str(p), delimiter=",").persist()
+    return read_records_csv(spark, str(p), delimiter=",")[0].persist()
 
 
 def test_person_row_count_comments_skipped(person_records):

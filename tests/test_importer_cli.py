@@ -67,7 +67,7 @@ def test_import_config_writes_output_and_cli(spark, fixture_dir, tmp_path):
         output_path=out,
     )
     first = result.specs[0]
-    assert first.output_path == f"{out}/src0_tag_node1"
+    assert first.output_path == f"{out}/src0_0_tag_node1"
     got = spark.read.parquet(first.output_path).collect()
     assert got[0].statement.startswith("INSERT VERTEX")
 
@@ -117,3 +117,72 @@ def test_cli_exits_nonzero_on_failed_rows(fixture_dir, capsys):
     assert all(s["failed"] == 2 for s in node_sources)
     assert payload["failed"] == 4
     assert "failed to import" in out.err
+
+
+def test_failed_rows_counted_and_exit_1(spark, tmp_path, capsys):
+    """Malformed rows are skipped during the import's single scan, counted
+    per source, and flip the CLI exit code (the reference's stats.IsFailed
+    contract, pkg/cmd/nebula-importer.go:118-130)."""
+    from nebula_importer_spark.__main__ import main
+
+    (tmp_path / "rows.csv").write_text("1,a,2\n2,b,3\n9,short\n10,a,2,extra\n")
+    cfg = tmp_path / "import.yaml"
+    cfg.write_text("""\
+manager:
+  spaceName: t
+  batch: 2
+sources:
+  - path: ./rows.csv
+    tags:
+      - name: node
+        id: {type: INT, index: 0}
+        props:
+          - {name: p1, type: STRING, index: 1}
+          - {name: p2, type: INT, index: 2}
+""")
+
+    result = import_config(spark, str(cfg), base_dir=str(tmp_path))
+    (stat,) = result.sources
+    assert (stat.raw_rows, stat.parsed_rows, stat.failed_rows) == (4, 2, 2)
+    assert result.specs[0].n_records == 2
+    assert result.n_failed == 2 and result.is_failed
+
+    # main() reuses the shared session and re-applies get_spark's settings
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        assert main(["-c", str(cfg), "--json"]) == 1
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    assert "failed to import: 2 record(s)" in capsys.readouterr().err
+
+
+def test_same_tag_twice_in_one_source_keeps_both_outputs(spark, tmp_path):
+    """One source feeding the same tag twice with reordered props (the
+    reference's fan-out of one reader to many importers): each spec writes
+    its own statement directory."""
+    (tmp_path / "student.csv").write_text("s1,ann,20\ns2,bob,21\ns3,cy,22\n")
+    cfg = """\
+sources:
+  - path: ./student.csv
+    tags:
+      - name: student
+        id: {type: STRING, index: 0}
+        props:
+          - {name: name, type: STRING, index: 1}
+          - {name: age, type: INT, index: 2}
+      - name: student
+        id: {type: STRING, index: 0}
+        filter: {expr: 'Record[2] != "20"'}
+        props:
+          - {name: age, type: INT, index: 2}
+          - {name: name, type: STRING, index: 1}
+"""
+    out = str(tmp_path / "out")
+    result = import_config(spark, cfg, base_dir=str(tmp_path), output_path=out)
+    first, second = result.specs
+    assert first.output_path != second.output_path
+    assert (first.n_records, second.n_records) == (3, 2)
+    for spec, props in ((first, "`name`, `age`"), (second, "`age`, `name`")):
+        rows = spark.read.parquet(spec.output_path).collect()
+        assert sum(r.n_records for r in rows) == spec.n_records
+        assert all(f"`student`({props})" in r.statement for r in rows)

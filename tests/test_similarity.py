@@ -54,7 +54,7 @@ def test_embedding_cosine_pairs_threshold(spark):
 
 def test_lsh_sketch_deterministic_and_discriminative(spark):
     df = _df(spark).withColumn(
-        "bucket", lsh_sign_sketch(F.col("embedding").cast("array<double>"), planes=8)
+        "bucket", lsh_sign_sketch(F.col("embedding").cast("array<double>"), planes=8, dim=4)
     )
     rows = {r.vec_id: r.bucket for r in df.collect()}
     rows2 = {r.vec_id: r.bucket for r in df.collect()}
@@ -63,9 +63,21 @@ def test_lsh_sketch_deterministic_and_discriminative(spark):
     assert rows[0] != rows[5]          # opposite vectors flip every plane
 
 
+
+def test_lsh_sketch_rejects_wrong_dim(spark):
+    """A vector whose size is not ``dim`` fails the query instead of
+    falling into a degenerate bucket."""
+    import pytest
+
+    df = _df(spark).withColumn(
+        "bucket", lsh_sign_sketch(F.col("embedding").cast("array<double>"), planes=8, dim=3)
+    )
+    with pytest.raises(Exception, match="differs from dim=3"):
+        df.collect()
+
 def test_ann_lsh_topk_recalls_bucket_neighbors(spark):
     df = _df(spark)
-    got = ann_lsh_topk(df, df.where("vec_id = 0"), k=3).collect()
+    got = ann_lsh_topk(df, df.where("vec_id = 0"), k=3, dim=4).collect()
     ids = {r.neighbor_id for r in got}
     assert 1 in ids  # same-bucket true neighbor always recalled
 
@@ -124,11 +136,11 @@ def test_embedding_lsh_banding_widens_recall(spark):
     }
     single = {
         (r.id_a, r.id_b): r.cos_e4
-        for r in embedding_lsh_pairs(df, threshold=0.6, planes=8, bands=1).collect()
+        for r in embedding_lsh_pairs(df, threshold=0.6, planes=8, bands=1, dim=4).collect()
     }
     banded = {
         (r.id_a, r.id_b): r.cos_e4
-        for r in embedding_lsh_pairs(df, threshold=0.6, planes=8, bands=2).collect()
+        for r in embedding_lsh_pairs(df, threshold=0.6, planes=8, bands=2, dim=4).collect()
     }
     assert set(single) <= set(banded)          # OR-ed bands only add recall
     assert set(banded) <= set(exact)           # verified: no false positives
@@ -136,7 +148,7 @@ def test_embedding_lsh_banding_widens_recall(spark):
         assert exact[k] == v                   # verified cosine is the exact one
     assert (0, 1) in banded                    # near-identical pair recalled
     with pytest.raises(ValueError):
-        embedding_lsh_pairs(df, planes=8, bands=3)
+        embedding_lsh_pairs(df, planes=8, bands=3, dim=4)
 
 
 def test_ivf_assign_is_zero_shuffle(spark):

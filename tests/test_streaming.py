@@ -49,6 +49,27 @@ def test_stream_csv_to_triples_parquet(spark, tmp_path):
     assert spark.read.parquet(out).count() == (len(PERSON_CSV_LINES) + 1) * 8
 
 
+
+def test_stream_and_batch_parse_a_file_alike(spark, tmp_path):
+    """The stream and the batch reader share one option block: a backslash
+    before a closing quote, padded fields and doubled quotes parse the same
+    way in both."""
+    from nebula_importer_spark.sources.csv import read_records_csv
+
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "p.csv").write_text('1,"No11\\",x\n2, padded ,y\n3,"a""b",z\n')
+    expected = [["1", "No11\\", "x"], ["2", " padded ", "y"], ["3", 'a"b', "z"]]
+
+    batch = read_records_csv(spark, str(src / "p.csv"))[0]
+    assert sorted(r.record for r in batch.collect()) == expected
+
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    q = start_parquet_sink(stream_records_csv(spark, str(src), n_columns=3), out, ckpt)
+    q.awaitTermination(120)
+    got = [r.record for r in spark.read.parquet(out).select("record").collect()]
+    assert sorted(got) == expected
+
 def test_windowed_counts_with_watermark(spark, tmp_path):
     src = tmp_path / "ev"
     src.mkdir()
