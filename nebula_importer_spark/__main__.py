@@ -39,13 +39,17 @@ def main(argv=None) -> int:
     from nebula_importer_spark.pipeline.importer import import_config
     from nebula_importer_spark.session import get_spark
 
-    # only stop a session we created (getOrCreate may hand us the caller's)
-    owns_session = SparkSession.getActiveSession() is None
-    spark = get_spark(
-        app_name="nebula-importer-spark",
-        master=args.master or "local[*]",
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    # a caller's active session is used as it is: get_spark's getOrCreate
+    # would re-apply every builder setting to it. Only a session created
+    # here is configured and stopped here.
+    spark = SparkSession.getActiveSession()
+    owns_session = spark is None
+    if owns_session:
+        spark = get_spark(
+            app_name="nebula-importer-spark",
+            master=args.master or "local[*]",
+        )
+        spark.sparkContext.setLogLevel("ERROR")
     try:
         result = import_config(
             spark,

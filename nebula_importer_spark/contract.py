@@ -547,7 +547,7 @@ def q_kg_triples_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kg_canonicalize_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(docs, threshold=0.3)
-    return canonical_mapping(docs, pairs, pairs_distinct=True)
+    return canonical_mapping(docs, pairs)
 
 
 def q_kg_canonicalize_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -555,15 +555,14 @@ def q_kg_canonicalize_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (run.py feeds canonical_mapping from minhash_lsh_pairs, never the
     all-pairs exact join), oracle-checked end-to-end.
 
-    carry_sets=True: unlike the solo dedup query (whose output IS the pair
-    list — sparse regime wins there), canonicalization consumes the pairs
-    through CC's symmetric union, and at threshold 0.3 a large share of
-    docs survives banding — the dup-heavy regime. Measured best-of-3 at
-    sf0.1: 4.68 s (r3 default) → 3.06 s with carry_sets + the pair-list
-    materialization now inside connected_components."""
+    carry_sets=True: at threshold 0.3 a large share of docs survives
+    banding — the dup-heavy regime, where the sets ride the signature
+    shuffle instead of being rebuilt candidate-side. Measured best-of-3 at
+    sf0.1 under the former min-label CC: 4.68 s → 3.06 s together with a
+    single pair-list computation, which the driver-side CC also keeps."""
     docs = _t(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(docs, threshold=0.3, carry_sets=True)
-    return canonical_mapping(docs, pairs, pairs_distinct=True)
+    return canonical_mapping(docs, pairs)
 
 
 def q_kg_skew_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:

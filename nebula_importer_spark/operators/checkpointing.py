@@ -18,9 +18,11 @@ interactive jobs, but a 1000-executor run wants the *reliable* variant —
 :func:`materialize` picks automatically: if the session has a checkpoint
 directory configured (``spark.sparkContext.setCheckpointDir(...)`` — the
 cluster-run knob), it uses the reliable form; otherwise it falls back to
-``localCheckpoint``. Every lineage cut in the package routes through here,
-so one driver-side line flips the whole engine to fault-tolerant
-checkpoints for cluster runs.
+``localCheckpoint``. Every lineage cut whose result outlives one query
+routes through here, so one driver-side line flips the whole engine to
+fault-tolerant checkpoints for cluster runs. A cut used only inside one
+query (multiprobe LSH in ``operators/similarity.py``) stays a
+``localCheckpoint``: a reliable one would leave its files behind per call.
 """
 
 from __future__ import annotations

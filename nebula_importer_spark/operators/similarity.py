@@ -263,10 +263,10 @@ def embedding_lsh_pairs(
         # the join sides (no ReuseExchange → the sketch pass runs twice).
         # The lineage cut pins ONE computed copy — tiny (id, band, probed,
         # key) rows — that both sides scan with its (band, key) partitioning
-        # preserved, so the join adds no further exchange.
-        from nebula_importer_spark.operators.checkpointing import materialize
-
-        exploded = materialize(exploded)
+        # preserved, so the join adds no further exchange. Always a local
+        # checkpoint: the cut lives only inside this query, and a reliable
+        # one would leave its files in the checkpoint dir on every call.
+        exploded = exploded.localCheckpoint(eager=True)
         probe = exploded
         exact = exploded.where(F.col("probed") == 0)
     else:

@@ -1,161 +1,74 @@
 """Canonicalization: connected components → canonical entity/doc IDs.
 
-GraphFrames is not available in this environment, so components are computed
-with the alternating large-star / small-star label-propagation algorithm
-(Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC'14) —
-the same algorithm GraphFrames uses internally — expressed as plain
-DataFrame joins/aggregations so it needs nothing beyond pyspark.
+Every doc maps to the minimum id of its near-duplicate component. The path
+is chosen from the input, never from a setting:
+
+* **At or below** :data:`DRIVER_CC_CAP` pairs the pair list is collected and
+  labelled by union-find on the driver. The near-dup graph is tiny on every
+  input the package builds (23 pairs for kg_build's 500 docs, 256 at sf0.1,
+  2,279 for the 50k-doc determinism corpus), and there a distributed
+  algorithm pays per-job overhead for each of its rounds: the former
+  min-label path ran 21 jobs for kg_build's 23 pairs, the driver path 4.
+* **Above** it, alternating large-star / small-star label propagation
+  (Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC'14
+  — the algorithm GraphFrames uses internally) expressed as plain DataFrame
+  joins/aggregations. It converges in O(log² n) rounds on any graph shape
+  and is the one path that runs on a graph too big for the driver.
+
+Both paths label a component by its minimum id, so the choice changes cost,
+never results. Python orders ``str`` by code point and Spark orders strings
+by their UTF-8 bytes; UTF-8 preserves code-point order, so the driver's
+minimum is the one Spark computes.
 
 Reference analog: none — the importer delegates identity resolution to the
 server; canonicalization is a north-rule addition (SURVEY.md §2.4).
-
-Scale notes: each iteration is two shuffles on the edge list; convergence is
-O(log d) iterations for diameter d. Iterations are persisted and
-local-checkpointed every ``checkpoint_every`` rounds to cut the lineage chain
-(without this the plan doubles per round and the driver OOMs at scale).
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from nebula_importer_spark.operators.checkpointing import materialize
 
+#: Largest pair list labelled on the driver. Measured with canonical_mapping
+#: on dedup-shaped pairs (components of 2-4 docs, 12-character string ids
+#: like the pipeline's doc_id), local[4], 8 shuffle partitions, warm runs,
+#: peak Python RSS by ``resource.getrusage`` (table in PLANS.md): 10^5 pairs
+#: driver 2.3 s / 0.20 GB, star 57 s; 10^6 driver 11.4 s / 0.51 GB, star
+#: 133 s; 3×10^6 driver 30 s / 1.07 GB, star 298 s. The driver wins at
+#: every size; the cap is the largest measured size whose driver RSS stays
+#: under 1 GB.
+DRIVER_CC_CAP = 1_000_000
 
-class ConvergenceError(RuntimeError):
-    """An iterative algorithm hit its round cap before reaching a fixpoint.
-
-    Dedicated type so ``canonical_mapping(algorithm="auto")`` can catch
-    EXACTLY the min-label cap signal and fall back to star — a bare
-    ``RuntimeError`` catch would also swallow unrelated failures raised
-    inside the rounds and silently re-run the whole job (ADVICE r4).
-    """
+#: Round cap of the star path; it needs O(log² n) rounds, so hitting the cap
+#: means a bug or a graph far beyond any measured size, and it raises.
+STAR_MAX_ROUNDS = 30
 
 
-def connected_components(
-    pairs: DataFrame,
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iterations: int = 25,
-    checkpoint_every: int = 3,
-    require_convergence: bool = True,
-    pairs_distinct: bool = False,
-    materialize_pairs: bool = True,
-) -> DataFrame:
-    """Min-label connected components over an undirected edge list.
+def _driver_labels(pairs: Iterable[tuple]) -> dict:
+    """{id: component minimum} for every id in ``pairs``, by union-find
+    whose root is always the smaller id (so each root is its set's min)."""
+    parent: dict = {}
 
-    Returns (id, component) for every vertex appearing in ``pairs``;
-    ``component`` is the minimum vertex id in the component.
+    def find(x):
+        root = parent.setdefault(x, x)
+        while parent[root] != root:
+            parent[root] = parent[parent[root]]  # path halving
+            root = parent[root]
+        return root
 
-    Simple min-label propagation: each round every vertex adopts the min
-    label in its closed neighborhood; converges in ≤ diameter rounds. For
-    web-scale graphs swap in the star variants; for entity-dedup graphs
-    (tiny components, small diameter) min-label is already optimal.
-
-    ``require_convergence`` (default ON) raises if ``max_iterations`` is
-    exhausted before the labels reach a fixpoint: partially-converged labels
-    are still *deterministic*, but they are not component minima, and a
-    silent cap-hit would break the resume contract's byte-identical claim
-    (components with diameter > max_iterations must be an explicit choice,
-    not an accident).
-
-    ``pairs_distinct=True`` asserts the caller's edge list is already
-    duplicate-free with ``src < dst`` per row (every pair generator in this
-    package guarantees it) and skips a full edge-shuffle ``dropDuplicates``
-    — the src<dst invariant makes the two union legs disjoint.
-
-    Each round costs one edge-label join + one aggregation; the convergence
-    probe reads the round's own persisted labels (a ``_chg`` flag computed
-    in the label update itself), so probing every round is cache-local —
-    no extra join, and the loop stops at the earliest fixpoint round.
-    (Probing only every k-th round was measured ~20% SLOWER end-to-end at
-    sf0.1 — extra rounds past the fixpoint cost more than the probe jobs.)
-
-    ``materialize_pairs`` (default ON) cuts the pair list's lineage before
-    the symmetric union below: the union embeds the ``pairs`` plan on BOTH
-    legs, so a computed pair list (every real caller: an LSH or inverted-
-    index join) would execute twice inside the first round's job — persist
-    cannot help because the legs race within one job before the cache
-    exists. The pair list is the near-dup output (small by design), so the
-    cut is one cheap extra pass; measured −14% on the sf0.1 canonicalize
-    query, and with the dup-heavy carry-sets verify regime −35% combined.
-    Pass ``False`` only when ``pairs`` is a raw stored table.
-    """
-    if materialize_pairs:
-        pairs = materialize(pairs.select(src_col, dst_col))
-    edges = pairs.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v")).union(
-        pairs.select(F.col(dst_col).alias("u"), F.col(src_col).alias("v"))
-    )
-    if not pairs_distinct:
-        edges = edges.dropDuplicates()
-    # explicit exchange on the iteration join key before caching: an edge
-    # list arriving from an AQE-coalesced join can be 1-2 partitions, and a
-    # cached relation keeps whatever width it was cached with — every CC
-    # round would then run its edge side serially no matter the cluster
-    # (observed: 2x pipeline wall at local[2] when the dropDuplicates
-    # exchange above was skipped and nothing re-spread the cache). Keying
-    # the exchange on v aligns the cache with the per-round labels join.
-    edges = edges.repartition(F.col("v")).persist()
-    store = (
-        edges.select(F.col("u").alias("id"))
-        .dropDuplicates()
-        .withColumn("component", F.col("id"))
-        .persist()
-    )
-    labels = store
-
-    converged = False
-    for i in range(max_iterations):
-        neighbor_min = (
-            edges.join(labels, edges["v"] == labels["id"])
-            .groupBy("u")
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        new_component = F.least(
-            F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels["id"] == neighbor_min["u"], "left")
-            .select(
-                "id",
-                new_component.alias("component"),
-                (new_component < F.col("component")).alias("_chg"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0:
-            new_labels = materialize(new_labels)
-        else:
-            new_labels = new_labels.persist()
-        # probe the round's own cached output — no old-vs-new join
-        changed = new_labels.where(F.col("_chg")).limit(1).count()
-        store.unpersist()
-        store = new_labels
-        labels = new_labels.drop("_chg")
-        if changed == 0:
-            converged = True
-            break
-
-    edges.unpersist()
-    if require_convergence and not converged:
-        # release the last round's labels cache too: the auto fallback
-        # re-runs with star, and an un-released per-attempt cache would
-        # accumulate for the rest of the session (ADVICE r4)
-        store.unpersist()
-        raise ConvergenceError(
-            f"connected_components did not converge within {max_iterations} "
-            "iterations (component diameter exceeds the cap); raise "
-            "max_iterations or switch algorithm='star'"
-        )
-    # self-clean: cut the final labels off the last round's cache so the
-    # loop's persisted relation can be released (callers hold long-lived
-    # references — an un-released per-call cache accumulates across
-    # pipeline invocations in one session). The labels relation is one
-    # narrow row per vertex; the extra pass is cheap and the returned plan
-    # no longer references any internal cache.
-    out = materialize(labels)
-    store.unpersist()
-    return out
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra < rb:
+            parent[rb] = ra
+        elif rb < ra:
+            parent[ra] = rb
+    return {x: find(x) for x in parent}
 
 
 def _neighborhood_min(edges: DataFrame) -> DataFrame:
@@ -167,15 +80,7 @@ def _neighborhood_min(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components_star(
-    pairs: DataFrame,
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iterations: int = 30,
-    require_convergence: bool = True,
-    pairs_distinct: bool = False,
-    materialize_pairs: bool = True,
-) -> DataFrame:
+def connected_components_star(pairs: DataFrame) -> DataFrame:
     """Alternating large-star / small-star connected components.
 
     The O(log² n)-round algorithm of Kiveris et al. (SoCC'14) — each round
@@ -190,25 +95,26 @@ def connected_components_star(
     * small-star: for every neighbor v ≤ u (v ≠ m), emit (v, m(u)),
       plus (u, m(u)).
 
-    Returns (id, component) with component = the component's minimum id.
+    ``pairs`` is an undirected (id_a, id_b) edge list; self-loops and
+    duplicates in either direction are allowed. Returns (id, component) with
+    component = the component's minimum id. Iterations are persisted and
+    lineage-cut every 3 rounds (without the cut the plan doubles per round
+    and the driver OOMs at scale). Raises ``RuntimeError`` when no fixpoint
+    is reached within :data:`STAR_MAX_ROUNDS` rounds.
     """
-    # undirected → directed both ways, deduped (skippable when the caller's
-    # pairs are already distinct with src < dst — the package generators are).
-    # materialize_pairs: see connected_components — the union embeds the
-    # pair plan twice; cut computed pair lists once up front.
-    if materialize_pairs:
-        pairs = materialize(pairs.select(src_col, dst_col))
+    # the union embeds the pair plan on BOTH legs, and the legs race within
+    # one job before any cache exists: cut a computed pair list once here
+    pairs = materialize(pairs.select("id_a", "id_b"))
     edges = (
-        pairs.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-        .union(pairs.select(F.col(dst_col).alias("u"), F.col(src_col).alias("v")))
+        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
+        .union(pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
         .where(F.col("u") != F.col("v"))
+        .dropDuplicates()
+        .persist()
     )
-    if not pairs_distinct:
-        edges = edges.dropDuplicates()
-    edges = edges.persist()
 
     fixpoint = False
-    for i in range(max_iterations):
+    for i in range(STAR_MAX_ROUNDS):
         # large-star
         mins = _neighborhood_min(edges)
         large = (
@@ -250,11 +156,11 @@ def connected_components_star(
             fixpoint = True
             break
 
-    if require_convergence and not fixpoint:
+    if not fixpoint:
         edges.unpersist()  # release the last round's cache before raising
-        raise ConvergenceError(
+        raise RuntimeError(
             f"connected_components_star did not reach a fixpoint within "
-            f"{max_iterations} rounds; raise max_iterations"
+            f"{STAR_MAX_ROUNDS} rounds"
         )
     # fixpoint is a star per component (plus mirror edges): every node's
     # minimum neighbor is the center; centers map to themselves
@@ -273,72 +179,39 @@ def connected_components_star(
     return out
 
 
-#: "auto" tries min-label for this many rounds before switching to star.
-#: Crossover reasoning: a min-label round is ONE edge-label join + one
-#: aggregation; a star round is ~2× that (two neighborhood-min passes +
-#: dedups) — so min-label wins whenever the component diameter is below
-#: roughly twice star's O(log² n) round count. Entity-dedup graphs (tiny
-#: near-clique components) converge in 3-5 rounds; a diameter above this
-#: cap means a chain-shaped graph, which is exactly star's regime.
-AUTO_MIN_LABEL_CAP = 12
+def canonical_mapping(ids: DataFrame, pairs: DataFrame) -> DataFrame:
+    """(doc_id, canonical_id) for ALL ``ids.doc_id``: the component minimum
+    for ids linked by the (id_a, id_b) ``pairs``, the id itself otherwise.
 
-
-def canonical_mapping(
-    ids: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    algorithm: str = "min_label",
-    pairs_distinct: bool = False,
-    materialize_pairs: bool = True,
-) -> DataFrame:
-    """(id, canonical_id) for ALL ids: component-min for linked ids, self else.
-
-    ``algorithm``: "min_label" (O(diameter) rounds — optimal for entity-dedup
-    graphs, whose components are tiny), "star" (large-star/small-star,
-    O(log² n) rounds — the choice for huge or high-diameter graphs), or
-    "auto": min-label capped at :data:`AUTO_MIN_LABEL_CAP` rounds, falling
-    back to star when the cap is hit. Both algorithms return identical
-    labels (component = min id), so the fallback changes cost, never
-    results. The abandoned min-label rounds are paid only on high-diameter
-    graphs — where star's round-complexity advantage dominates them
-    (measured at local[8]: on a 2000-node path graph min-label needs the
-    full diameter ≈ 2000 rounds — 12 rounds took 9.5 s, ~1,600 s
-    extrapolated — while star converges in 222 s; on the sf0.1 near-dup
-    corpus min-label converges in 1.4 s where star takes 6.5 s — each
-    algorithm loses badly in the other's regime, hence the bounded probe,
-    which costs high-diameter graphs ~10 s to save the dedup-shaped 5×).
-    ``pairs_distinct``: see :func:`connected_components` — skips the edge
-    dedup shuffle for generator-produced pair lists.
+    Labels the components on the driver when there are at most
+    :data:`DRIVER_CC_CAP` pairs, with :func:`connected_components_star`
+    above that (the module docstring has the measurement).
     """
-    if algorithm == "auto":
-        # materialize once here so a star fallback reuses the computed pairs
-        if materialize_pairs:
-            pairs = materialize(pairs.select(src_col, dst_col))
-        try:
-            comp = connected_components(
-                pairs, src_col, dst_col,
-                max_iterations=AUTO_MIN_LABEL_CAP,
-                pairs_distinct=pairs_distinct, materialize_pairs=False,
+    # the limited collect computes every partition of the pair list: cache
+    # it so the star path does not compute the pairs a second time
+    pairs = pairs.select("id_a", "id_b").persist()
+    try:
+        # Arrow both ways: at 10^6 pairs toPandas took 1.7 s against
+        # collect's 4.5 s, and a pandas frame became a DataFrame in 1.5 s
+        # against 7.9 s from a list of tuples
+        head = pairs.limit(DRIVER_CC_CAP + 1).toPandas()
+        if len(head) > DRIVER_CC_CAP:
+            comp = connected_components_star(pairs)
+        else:
+            labels = _driver_labels(zip(head["id_a"].tolist(), head["id_b"].tolist()))
+            id_type = pairs.schema["id_a"].dataType
+            comp = ids.sparkSession.createDataFrame(
+                pd.DataFrame({"id": list(labels), "component": list(labels.values())}),
+                StructType([StructField("id", id_type), StructField("component", id_type)]),
             )
-        except ConvergenceError:
-            comp = connected_components_star(
-                pairs, src_col, dst_col,
-                pairs_distinct=pairs_distinct, materialize_pairs=False,
-            )
-    else:
-        cc = connected_components_star if algorithm == "star" else connected_components
-        comp = cc(
-            pairs, src_col, dst_col,
-            pairs_distinct=pairs_distinct, materialize_pairs=materialize_pairs,
-        )
+    finally:
+        pairs.unpersist()
     return (
-        ids.select(F.col(id_col))
+        ids.select("doc_id")
         .dropDuplicates()
-        .join(comp, ids[id_col] == comp["id"], "left")
+        .join(comp, ids["doc_id"] == comp["id"], "left")
         .select(
-            F.col(id_col),
-            F.coalesce(F.col("component"), F.col(id_col)).alias("canonical_id"),
+            "doc_id",
+            F.coalesce(F.col("component"), F.col("doc_id")).alias("canonical_id"),
         )
     )

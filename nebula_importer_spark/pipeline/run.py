@@ -168,14 +168,9 @@ def run_pipeline(
                           # survive banding, so sets ride the signature
                           # shuffle instead of being rebuilt candidate-side
     )
-    # algorithm="auto": min-label (optimal for the near-dup graph's tiny
-    # components) with a bounded round cap, star fallback so a pathological
-    # chain-shaped dup graph degrades to O(log² n) rounds instead of failing
-    canon = canonical_mapping(
-        corpus.select("doc_id"), pairs, pairs_distinct=True, algorithm="auto"
-    ).persist()
-    # the CC labels inside canon are materialized (connected_components
-    # self-cleans and returns a checkpointed relation), so the reassembled
+    canon = canonical_mapping(corpus.select("doc_id"), pairs).persist()
+    # canonical_mapping has already computed the pairs, and its component
+    # labels are a driver-built or checkpointed relation, so the reassembled
     # text is no longer referenced by any live plan — release it now rather
     # than at result-consumption time (it is the widest cache of the run)
     flat.unpersist()

@@ -53,12 +53,31 @@ def test_materialize_uses_reliable_checkpoint_when_dir_set(spark, checkpoint_dir
     assert files, "reliable checkpoint wrote no files"
 
 
-def test_canonicalize_and_pagerank_identical_under_reliable_checkpoint(spark, tmp_path):
-    """canonical_mapping + pagerank: same results with and without the
-    checkpoint dir, and the reliable run leaves checkpoint files on disk."""
+def test_multiprobe_lsh_leaves_no_checkpoint_files(spark, checkpoint_dir):
+    """The multiprobe LSH cut lives inside one query: it stays executor-local
+    under a checkpoint dir instead of leaving reliable files per call."""
+    from nebula_importer_spark.operators.similarity import embedding_lsh_pairs
+
+    vecs = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.99, 0.1]), (2, [0.0, 1.0])],
+        "vec_id long, embedding array<float>",
+    )
+    pairs = embedding_lsh_pairs(vecs, threshold=0.9, multiprobe=True, dim=2)
+    assert [(r.id_a, r.id_b) for r in pairs.collect()] == [(0, 1)]
+    assert _ckpt_files(checkpoint_dir) == []
+
+
+def test_canonicalize_and_pagerank_identical_under_reliable_checkpoint(
+    spark, tmp_path, monkeypatch
+):
+    """canonical_mapping (star path) + pagerank: same results with and
+    without the checkpoint dir, and the reliable run leaves checkpoint files
+    on disk."""
+    import nebula_importer_spark.pipeline.canonicalize as cz
     from nebula_importer_spark.operators.graph import pagerank
     from nebula_importer_spark.pipeline.canonicalize import canonical_mapping
 
+    monkeypatch.setattr(cz, "DRIVER_CC_CAP", 0)  # force the star path
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (8, 9), (9, 1)], "id_a long, id_b long"
     )
@@ -67,7 +86,7 @@ def test_canonicalize_and_pagerank_identical_under_reliable_checkpoint(spark, tm
     def run():
         cm = sorted(
             (r.doc_id, r.canonical_id)
-            for r in canonical_mapping(ids, pairs, id_col="doc_id").collect()
+            for r in canonical_mapping(ids, pairs).collect()
         )
         pr = sorted(
             (r.id, r.rank_mu)

@@ -17,10 +17,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from nebula_importer_spark.fixtures import PERSON_CSV_LINES, person_spec
-from nebula_importer_spark.pipeline.canonicalize import (
-    connected_components,
-    connected_components_star,
-)
+import nebula_importer_spark.pipeline.canonicalize as cz
+from nebula_importer_spark.pipeline.canonicalize import connected_components_star
 from nebula_importer_spark.pipeline.corpus import synthetic_corpus
 from nebula_importer_spark.pipeline.run import run_pipeline
 
@@ -47,26 +45,19 @@ def test_pipeline_partitioning_invariance(spark, tmp_path):
     assert _same(a.stats, b.stats)
 
 
-def test_cc_raises_when_diameter_exceeds_cap(spark):
-    # path graph 0-1-2-…-10: min-label needs ~diameter rounds
+def test_cc_raises_when_diameter_exceeds_cap(spark, monkeypatch):
+    # path graph 0-1-2-…-10: star needs several rounds to reach its fixpoint
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(10)], "id_a long, id_b long"
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, max_iterations=2).collect()
-    # explicit opt-out returns (deterministic) partial labels
-    partial = connected_components(
-        pairs, max_iterations=2, require_convergence=False
-    )
-    assert partial.count() == 11
-    # enough rounds: single component labeled by its minimum
-    full = connected_components(pairs, max_iterations=15)
-    assert {r.component for r in full.collect()} == {0}
+    monkeypatch.setattr(cz, "STAR_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="did not reach a fixpoint"):
+        connected_components_star(pairs).collect()
 
 
 def test_cc_star_converges_on_path_graph(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(10)], "id_a long, id_b long"
     )
-    labels = connected_components_star(pairs, max_iterations=15)
+    labels = connected_components_star(pairs)
     assert {r.component for r in labels.collect()} == {0}

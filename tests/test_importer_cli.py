@@ -147,12 +147,9 @@ sources:
     assert result.specs[0].n_records == 2
     assert result.n_failed == 2 and result.is_failed
 
-    # main() reuses the shared session and re-applies get_spark's settings
-    partitions = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        assert main(["-c", str(cfg), "--json"]) == 1
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    # main() uses the caller's active session as it is
+    assert main(["-c", str(cfg), "--json"]) == 1
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
     assert "failed to import: 2 record(s)" in capsys.readouterr().err
 
 

@@ -8,7 +8,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from nebula_importer_spark.fixtures import PERSON_CSV_LINES, person_spec
-from nebula_importer_spark.pipeline.canonicalize import canonical_mapping, connected_components
+from nebula_importer_spark.pipeline.canonicalize import (
+    _driver_labels,
+    canonical_mapping,
+    connected_components_star,
+)
 from nebula_importer_spark.pipeline.corpus import explode_spans, interleave_documents, synthetic_corpus
 from nebula_importer_spark.pipeline.extract import doc_mentions, extract_mentions
 from nebula_importer_spark.pipeline.lineage import Checkpoint, with_bucket
@@ -70,60 +74,75 @@ def test_link_mentions_exact_and_fuzzy(spark):
 
 
 def test_connected_components_chain_and_isolated(spark):
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (7, 8)], "id_a long, id_b long"
-    )
-    comp = {r.id: r.component for r in connected_components(pairs).collect()}
-    assert comp == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
+    """Both paths label a chain and a separate edge by their minimum ids."""
+    edges = [(1, 2), (2, 3), (7, 8)]
+    want = {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
+    assert _driver_labels(edges) == want
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    comp = {r.id: r.component for r in connected_components_star(pairs).collect()}
+    assert comp == want
 
 
 def test_canonical_mapping_includes_isolated(spark):
     ids = spark.createDataFrame([(i,) for i in range(1, 6)], "doc_id long")
-    pairs = spark.createDataFrame([(2, 4)], "id_a long, id_b long")
-    got = {r.doc_id: r.canonical_id for r in canonical_mapping(ids, pairs).collect()}
-    assert got == {1: 1, 2: 2, 3: 3, 4: 2, 5: 5}
+    for edges, want in (
+        ([(2, 4)], {1: 1, 2: 2, 3: 3, 4: 2, 5: 5}),
+        ([], {i: i for i in range(1, 6)}),  # no pairs: every id is its own
+    ):
+        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+        got = {r.doc_id: r.canonical_id for r in canonical_mapping(ids, pairs).collect()}
+        assert got == want
 
 
 def test_canonical_mapping_auto_picks_algorithm(spark, monkeypatch):
-    """"auto" = min-label for low-diameter graphs; star fallback when the
-    bounded min-label probe hits its round cap (high-diameter chain)."""
+    """The pair count picks the path: the driver at or below DRIVER_CC_CAP,
+    star above it — and a chain above the cap converges on star."""
     import nebula_importer_spark.pipeline.canonicalize as cz
 
     calls: list[str] = []
-    orig_ml, orig_star = cz.connected_components, cz.connected_components_star
+    orig_driver, orig_star = cz._driver_labels, cz.connected_components_star
     monkeypatch.setattr(
-        cz, "connected_components",
-        lambda *a, **k: (calls.append("min_label"), orig_ml(*a, **k))[1],
+        cz, "_driver_labels",
+        lambda *a: (calls.append("driver"), orig_driver(*a))[1],
     )
     monkeypatch.setattr(
         cz, "connected_components_star",
-        lambda *a, **k: (calls.append("star"), orig_star(*a, **k))[1],
+        lambda *a: (calls.append("star"), orig_star(*a))[1],
     )
+    monkeypatch.setattr(cz, "DRIVER_CC_CAP", 5)
 
-    # tiny components: min-label converges well inside the cap, no fallback
     ids = spark.createDataFrame([(i,) for i in range(6)], "doc_id long")
     pairs = spark.createDataFrame([(0, 1), (3, 4)], "id_a long, id_b long")
-    got = {
-        r.doc_id: r.canonical_id
-        for r in cz.canonical_mapping(ids, pairs, algorithm="auto").collect()
-    }
+    got = {r.doc_id: r.canonical_id for r in cz.canonical_mapping(ids, pairs).collect()}
     assert got == {0: 0, 1: 0, 2: 2, 3: 3, 4: 3, 5: 5}
-    assert calls == ["min_label"]
+    assert calls == ["driver"]
 
-    # chain with diameter > AUTO_MIN_LABEL_CAP: the probe caps out and the
-    # star fallback produces the same (correct) labels
     calls.clear()
-    n = cz.AUTO_MIN_LABEL_CAP + 4
+    n = 12
     ids = spark.createDataFrame([(i,) for i in range(n + 1)], "doc_id long")
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "id_a long, id_b long"
     )
-    got = {
-        r.doc_id: r.canonical_id
-        for r in cz.canonical_mapping(ids, chain, algorithm="auto").collect()
-    }
+    got = {r.doc_id: r.canonical_id for r in cz.canonical_mapping(ids, chain).collect()}
     assert got == {i: 0 for i in range(n + 1)}
-    assert calls == ["min_label", "star"]
+    assert calls == ["star"]
+
+
+def test_canonical_mapping_small_graph_runs_few_jobs(spark):
+    """Below the cap the labels cost one collect of the pairs, not a job per
+    label-propagation round."""
+    sc = spark.sparkContext
+    ids = spark.createDataFrame([(i,) for i in range(40)], "doc_id long")
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 30, 3)], "id_a long, id_b long"
+    )
+    group = "test-canonical-mapping-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        assert len(canonical_mapping(ids, pairs).collect()) == 40
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 5
 
 
 def test_multimodal_plumbing(spark):
@@ -192,33 +211,42 @@ def test_run_pipeline_end_to_end_with_fixture_replay(spark):
     assert stats["tag:Document"] == 40
 
 
-def test_star_cc_matches_min_label_on_random_graphs(spark):
-    """large-star/small-star CC ≡ min-label CC on seeded random graphs."""
+def test_star_cc_matches_min_label_on_random_graphs(spark, monkeypatch):
+    """The driver path (union-find, component minimum as root) and the star
+    path return the same mapping on seeded random graphs with reversed and
+    duplicate pairs. String ids include non-ASCII ones whose code-point
+    order differs from UTF-16 order: Python's str order and Spark's UTF-8
+    byte order must agree on every component minimum."""
     import random
 
-    from nebula_importer_spark.pipeline.canonicalize import connected_components_star
+    import nebula_importer_spark.pipeline.canonicalize as cz
 
-    for seed in (1, 2, 3):
+    # the fixed pairs are components of their own, so each minimum is
+    # decided by that one comparison; UTF-16 order would pick "\U00010000"
+    names = ["a", "b", "~", "0", "\ud7ff", "b\u00e9", "\u00f6", "\u4e2d"]
+    fixed = [("\U00010000", "\uffff"), ("\u00e9", "z")]
+    for seed, kind in ((1, "long"), (2, "long"), (3, "string")):
         rnd = random.Random(seed)
-        n = 60
-        edges = [
-            (rnd.randrange(n), rnd.randrange(n)) for _ in range(40)
-        ]
+        verts = list(range(60)) if kind == "long" else names
+        edges = [(rnd.choice(verts), rnd.choice(verts)) for _ in range(len(verts) * 2 // 3)]
         edges = [(a, b) for a, b in edges if a != b]
-        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        simple = {
-            r.id: r.component for r in connected_components(pairs).collect()
-        }
-        star = {
-            r.id: r.component for r in connected_components_star(pairs).collect()
-        }
-        assert star == simple, f"seed={seed}"
+        edges += [(b, a) for a, b in edges[:5]] + edges[:3]
+        if kind == "string":
+            verts = verts + [v for pair in fixed for v in pair]
+            edges += fixed
+        ids = spark.createDataFrame([(v,) for v in verts], f"doc_id {kind}")
+        pairs = spark.createDataFrame(edges, f"id_a {kind}, id_b {kind}")
+        driver = {r.doc_id: r.canonical_id for r in canonical_mapping(ids, pairs).collect()}
+        with monkeypatch.context() as m:
+            m.setattr(cz, "DRIVER_CC_CAP", 0)
+            star = {r.doc_id: r.canonical_id for r in canonical_mapping(ids, pairs).collect()}
+        assert driver == star, f"seed={seed}"
+        if kind == "string":
+            assert star["\U00010000"] == "\uffff" and star["z"] == "z"
 
 
 def test_star_cc_long_chain(spark):
-    """A path graph (worst case for min-label) still resolves to one min."""
-    from nebula_importer_spark.pipeline.canonicalize import connected_components_star
-
+    """A path graph (the highest-diameter shape) still resolves to one min."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "id_a long, id_b long"
     )

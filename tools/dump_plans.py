@@ -96,16 +96,29 @@ COMMENTARY = {
         "projection, not per candidate pair."
     ),
     "kg_canonicalize_cc": (
-        "Canonicalization via min-label connected components: the final "
-        "plan joins doc ids against the materialized component labels "
-        "(`Scan ExistingRDD` — each CC round is lineage-cut through "
-        "`materialize()`, reliable `checkpoint()` iff a checkpoint dir is "
-        "configured, tests/test_checkpointing.py). Per-round shape: one "
-        "edge-label join + one `min` aggregation, probe reads the round's "
-        "own cached `_chg` flag. `algorithm='auto'` caps min-label at 12 "
-        "rounds and falls back to large/small-star (ConvergenceError), so "
-        "dedup-shaped graphs get O(diameter) rounds and chain-shaped "
-        "graphs get O(log² n)."
+        "Canonicalization has one entry point, `canonical_mapping(ids, "
+        "pairs)`, and picks its path from the pair count. It collects "
+        "`pairs.limit(DRIVER_CC_CAP + 1)` through Arrow. This query's pair "
+        "list is far below the cap, so union-find on the driver labels "
+        "each component by its minimum id, and the labels come back as the "
+        "`LocalTableScan` broadcast into the left join against the doc ids: "
+        "no label-propagation round is left in the plan. Above the cap the "
+        "labels come from large/small-star (O(log² n) rounds, each "
+        "lineage-cut through `materialize()`, reliable `checkpoint()` iff a "
+        "checkpoint dir is configured), and a `Scan ExistingRDD` takes the "
+        "`LocalTableScan`'s place.\n\n"
+        "The cap, measured with `canonical_mapping` on dedup-shaped pairs "
+        "(components of 2-4 docs, 12-character string ids), local[4], 8 "
+        "shuffle partitions, input read from parquet, output written to the "
+        "`noop` sink; time of the second run in one session (first run in "
+        "brackets); peak RSS of the Python driver process "
+        "(`resource.getrusage`). `DRIVER_CC_CAP` is the largest size at "
+        "which the driver wins and stays under 1 GB: 10^6.\n\n"
+        "| pairs | driver | driver RSS | star | star RSS |\n"
+        "|---|---|---|---|---|\n"
+        "| 10^5 | 2.3 s (7.0) | 0.20 GB | 56.9 s (75.7) | 0.14 GB |\n"
+        "| 10^6 | 11.4 s (16.1) | 0.51 GB | 133 s (158) | 0.14 GB |\n"
+        "| 3×10^6 | 30.0 s (39.9) | 1.07 GB | 298 s (313) | 0.14 GB |"
     ),
 }
 
