@@ -21,7 +21,8 @@ cluster-run knob), it uses the reliable form; otherwise it falls back to
 ``localCheckpoint``. Every lineage cut whose result outlives one query
 routes through here, so one driver-side line flips the whole engine to
 fault-tolerant checkpoints for cluster runs. A cut used only inside one
-query (multiprobe LSH in ``operators/similarity.py``) stays a
+query (multiprobe LSH in ``operators/similarity.py``, the signature and
+candidate cuts of ``operators/dedup.minhash_lsh_pairs``) stays a
 ``localCheckpoint``: a reliable one would leave its files behind per call.
 """
 

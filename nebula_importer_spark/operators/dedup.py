@@ -26,8 +26,6 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from nebula_importer_spark.operators.checkpointing import materialize
-
 HEX = "0123456789abcdef"
 
 #: Default document-frequency cap for the exact inverted-index path. A
@@ -271,8 +269,10 @@ def minhash_lsh_pairs(
         # materialize once: sig feeds banding AND both verify sides; lazy,
         # the three consumer stages run concurrently inside one job and
         # each would recompute the full shingle+hash pass (persist alone
-        # cannot dedupe concurrent in-job branches)
-        sig = materialize(sig)
+        # cannot dedupe concurrent in-job branches). Both cuts here live
+        # inside this query, so they stay executor-local: a reliable
+        # checkpoint would leave its files behind per call
+        sig = sig.localCheckpoint(eager=True)
     band_structs = [
         F.struct(
             F.lit(b).alias("band"),
@@ -324,7 +324,7 @@ def minhash_lsh_pairs(
         # candidate side when its runtime size is small but falls back to a
         # shuffle join on a dup-heavy corpus where forcing the broadcast
         # would OOM the driver.
-        cand = materialize(cand)
+        cand = cand.localCheckpoint(eager=True)
         cand_ids = (
             cand.select(F.col("id_a").alias(id_col))
             .union(cand.select(F.col("id_b").alias(id_col)))

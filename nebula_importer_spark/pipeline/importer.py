@@ -12,6 +12,12 @@ and final stats. :func:`import_config` is that flow over this engine:
   (``operators.statements.assemble_statements``), optionally written to
   ``output_path/src<source_idx>_<spec_idx>_<kind>_<name>`` as parquet —
   the engine's sink stand-in for the reference's client pool,
+* every count the import reports rides a job that runs anyway, as the
+  reference accumulates its stats during its single read
+  (``pkg/stats/stats.go``): source rows on the scan, records and
+  statements on the statement write, table rows on the table write — each
+  an ``Observation``. The one count job left is the UPDATE anti-join that
+  counts batch rows whose key the table lacks,
 * hooks are driver-side statements. The reference executes them against
   NebulaGraph and aborts on failure (``pkg/manager/manager.go:288-334``);
   here anything that parses as Spark SQL runs (and failures abort the
@@ -32,10 +38,14 @@ import time
 from dataclasses import dataclass, field
 from typing import List, Optional, Union
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from nebula_importer_spark.operators.mapping import edge_values, node_values
-from nebula_importer_spark.operators.statements import assemble_statements
+from nebula_importer_spark.operators.statements import (
+    STATEMENT_SCHEMA,
+    assemble_statements,
+)
 from nebula_importer_spark.plans.specs import EdgeSpec, NodeSpec
 from nebula_importer_spark.sources.config import (
     ImporterConfig,
@@ -189,8 +199,10 @@ def import_config(
     ``cfg`` may be an :class:`ImporterConfig` or a YAML path/text.
     ``base_dir`` resolves relative source paths (the reference resolves
     them against the config file's directory). ``output_path`` writes each
-    spec's statement batches as parquet; without it statements are still
-    fully materialized (counted) — the noop sink.
+    spec's statement batches as parquet; without it they are written once
+    to Spark's noop sink. ``n_records`` and ``n_statements`` are observed
+    on that write and ``table_rows`` on the apply's table write: no job
+    runs only to produce a number except UPDATE's failed-row anti-join.
 
     ``apply_path`` turns on the store analog: besides rendering statements,
     each spec's mutation batch is APPLIED to a persistent parquet table at
@@ -240,8 +252,6 @@ def import_config(
                 ("edge", s) for s in src.edges
             ]
             if apply_path is not None:
-                from pyspark.sql import functions as F
-
                 # statement order within the source, for apply-mode
                 # last-writer-wins (unique; ascending within a partition
                 # and partitions are ordered by split, so it follows file
@@ -305,17 +315,18 @@ def _run_spec(
     )
     if apply_path is not None:
         values = values.persist()  # shared: statement assembly + apply
-    n_records = values.count()
     stmts = assemble_statements(values.drop(_SEQ_COL), spec, batch=batch)
     out = None
     if output_path is not None:
         # the spec's position keeps two specs of one kind and name apart
         out = f"{output_path}/src{spec_key}_{kind}_{spec.name}"
-        stmts.write.mode("overwrite").parquet(out)
-        stmts = spark.read.parquet(out)
-        n_statements = stmts.count()
-    else:
-        n_statements = stmts.count()
+    # every fragment lands in exactly one statement: the statements'
+    # n_records sum is the spec's record count
+    counts = _write_counted(
+        stmts, out, n=F.count(F.lit(1)), records=F.sum("n_records")
+    )
+    if out is not None:
+        stmts = spark.read.schema(STATEMENT_SCHEMA).parquet(out)
     applied_path = table_rows = None
     n_failed = 0
     if apply_path is not None:
@@ -329,8 +340,8 @@ def _run_spec(
         source=src.path or "sql",
         kind=kind,
         name=spec.name,
-        n_records=n_records,
-        n_statements=n_statements,
+        n_records=counts["records"] or 0,
+        n_statements=counts["n"],
         statements=stmts,
         output_path=out,
         applied_path=applied_path,
@@ -356,7 +367,6 @@ def _apply_spec(
     a guard-failed SET clause becomes SQL NULL = "not set by this batch",
     exactly the clause the renderer drops from the statement text).
     """
-    from pyspark.sql import functions as F
     from pyspark.sql.types import StringType, StructField, StructType
 
     from nebula_importer_spark.functions.filters import compile_filter
@@ -416,7 +426,21 @@ def _apply_spec(
     post = apply_mutations(
         table, batch, spec.mode.value, key_cols=key_cols, seq_col=_SEQ_COL
     )
-    # cut lineage before the overwrite deletes the files the plan reads
+    # cut lineage before the overwrite deletes the files the plan reads;
+    # the cut's own job is an RDD action, so the write does the counting
     post = materialize(post)
-    post.write.mode("overwrite").parquet(table_path)
-    return table_path, post.count(), n_failed
+    table_rows = _write_counted(post, table_path, n=F.count(F.lit(1)))["n"]
+    return table_path, table_rows, n_failed
+
+
+def _write_counted(df: DataFrame, path: Optional[str], **aggs) -> dict:
+    """Write ``df`` as parquet at ``path`` (the noop sink when None) and
+    return the named ``aggs``, computed by an observe node on that write —
+    the import's one way to count."""
+    obs = Observation()
+    writer = df.observe(obs, *(c.alias(k) for k, c in aggs.items())).write
+    if path is None:
+        writer.format("noop").mode("overwrite").save()
+    else:
+        writer.mode("overwrite").parquet(path)
+    return obs.get

@@ -48,14 +48,18 @@ def _cfg(tmp_path, csv_name, spec_block):
     )
 
 
-def _run(spark, tmp_path, csv_name, rows, spec_block):
+def _run(spark, tmp_path, csv_name, rows, spec_block, **kwargs):
+    import pyarrow.parquet as pq
+
     (tmp_path / csv_name).write_text("\n".join(rows) + "\n")
     cfg_path = tmp_path / f"{csv_name}.yaml"
     cfg_path.write_text(_cfg(tmp_path, csv_name, spec_block))
-    return import_config(
-        spark, str(cfg_path), base_dir=str(tmp_path),
-        apply_path=str(tmp_path / "store"),
-    )
+    kwargs.setdefault("apply_path", str(tmp_path / "store"))
+    result = import_config(spark, str(cfg_path), base_dir=str(tmp_path), **kwargs)
+    for spec in result.specs:  # the observed count against the files
+        if spec.applied_path is not None:
+            assert spec.table_rows == pq.read_table(spec.applied_path).num_rows
+    return result
 
 
 def _table(spark, tmp_path):
@@ -124,6 +128,32 @@ def test_apply_insert_idempotent(spark, tmp_path):
     again = _run(spark, tmp_path, "p2.csv", rows, spec)
     assert first.specs[0].table_rows == again.specs[0].table_rows == 2
     assert _table(spark, tmp_path) == {"1": ('"a"', "10"), "2": ('"b"', "20")}
+
+
+def test_import_runs_no_count_jobs(spark, tmp_path):
+    """Every count the import reports is observed on a write it runs
+    anyway: one statement write per spec, one table write per apply."""
+    sc = spark.sparkContext
+    spec = PERSON_SPEC.format(mode="UPSERT")
+    _run(spark, tmp_path, "p.csv", ["1,a,10", "2,b,20"], spec)
+
+    def jobs(group, **kwargs):
+        sc.setJobGroup(group, group)
+        try:
+            result = _run(spark, tmp_path, "q.csv", ["2,bo,21", "3,c,30"], spec,
+                          **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        (s,) = result.specs
+        assert (s.n_records, s.n_statements) == (2, 1)
+        return s, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    s, n = jobs("test-import-jobs-apply", output_path=str(tmp_path / "out"))
+    assert s.table_rows == 3
+    assert n <= 8
+    s, n = jobs("test-import-jobs-noop", apply_path=None)
+    assert s.table_rows is None
+    assert n <= 3
 
 
 EDGE_SPEC = """

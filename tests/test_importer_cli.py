@@ -145,6 +145,8 @@ sources:
     (stat,) = result.sources
     assert (stat.raw_rows, stat.parsed_rows, stat.failed_rows) == (4, 2, 2)
     assert result.specs[0].n_records == 2
+    # no output path: statements go to the noop sink, counted on that write
+    assert result.specs[0].n_statements == result.specs[0].statements.count() == 1
     assert result.n_failed == 2 and result.is_failed
 
     # main() uses the caller's active session as it is
@@ -157,7 +159,8 @@ def test_same_tag_twice_in_one_source_keeps_both_outputs(spark, tmp_path):
     """One source feeding the same tag twice with reordered props (the
     reference's fan-out of one reader to many importers): each spec writes
     its own statement directory."""
-    (tmp_path / "student.csv").write_text("s1,ann,20\ns2,bob,21\ns3,cy,22\n")
+    lines = ["s1,ann,20", "s2,bob,21", "s3,cy,22"]
+    (tmp_path / "student.csv").write_text("\n".join(lines) + "\n")
     cfg = """\
 sources:
   - path: ./student.csv
@@ -178,8 +181,11 @@ sources:
     result = import_config(spark, cfg, base_dir=str(tmp_path), output_path=out)
     first, second = result.specs
     assert first.output_path != second.output_path
-    assert (first.n_records, second.n_records) == (3, 2)
+    assert (first.n_records, second.n_records) == (
+        len(lines), sum(1 for l in lines if l.split(",")[2] != "20")
+    )
     for spec, props in ((first, "`name`, `age`"), (second, "`age`, `name`")):
         rows = spark.read.parquet(spec.output_path).collect()
         assert sum(r.n_records for r in rows) == spec.n_records
+        assert spec.n_statements == spec.statements.count() == len(rows)
         assert all(f"`student`({props})" in r.statement for r in rows)
