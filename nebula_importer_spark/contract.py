@@ -7,6 +7,19 @@ SQL DuckDB runs on the same parquet tables. Column names/types are aligned on
 both sides — the driver compares row count + schema + order-insensitive
 value hash.
 
+The Spark side of each query calls the shipped operators; the contract
+keeps no copy of a pipeline stage. The KG-pipeline stages are checked by:
+
+* extract (``extract_mentions`` + ``doc_mentions``): ``kg_extract_mentions``
+  (gazetteer channel) and ``kg_extract_pattern`` (pattern channel);
+* link (``link_mentions``, exact alias broadcast): ``kg_link_alias``, and the
+  mention edges of ``kg_triples_docs``;
+* canonicalize (``canonical_mapping``): ``kg_canonicalize_cc`` and
+  ``kg_canonicalize_lsh``;
+* materialize (``predicate_stats``, salted two-phase aggregation):
+  ``kg_skew_twophase``;
+* corpus (``interleave_documents`` + ``reassemble``): ``spans_roundtrip``.
+
 Engine-portability rules used throughout (so Spark and DuckDB render
 identical values):
 
@@ -52,6 +65,9 @@ from nebula_importer_spark.pipeline.corpus import (
     interleave_documents,
     reassemble,
 )
+from nebula_importer_spark.pipeline.extract import doc_mentions, extract_mentions
+from nebula_importer_spark.pipeline.link import link_mentions
+from nebula_importer_spark.pipeline.materialize import predicate_stats
 from nebula_importer_spark.plans.specs import EdgeSpec, NodeIDSpec, NodeSpec, PropSpec, RankSpec
 from nebula_importer_spark.sources.csv import records_from_columns
 
@@ -186,20 +202,29 @@ ALIASES = {
 
 
 def _mentions(
-    spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
+    spark: SparkSession,
+    sf_dir: str,
+    docs: DataFrame | None = None,
+    gazetteer: tuple[str, ...] = GAZETTEER,
+    pattern: str | None = None,
 ) -> DataFrame:
-    """``docs`` lets a caller that already scanned the table reuse it —
+    """(doc_id, term, n) from the shipped extract, each document one
+    ``text`` span — not ``interleave_documents``, whose media spans the
+    extract skips while the oracle counts the whole document.
+
+    ``docs`` lets a caller that already scanned the table reuse it —
     ``_t``'s input-split re-spread is a full shuffle, and embedding two of
     them in one plan (e.g. ``_doc_triples``) doubles the scan cost."""
     if docs is None:
         docs = _t(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    toks = docs.select("doc_id", F.explode(F.split(norm, " ")).alias("term"))
-    return (
-        toks.where(F.col("term").isin(*GAZETTEER))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").alias("n"))
+    spans = docs.select(
+        F.col("doc_id").cast("string").alias("doc_id"),
+        F.lit("text").alias("kind"),
+        "text",
+        F.lit(0).alias("offset"),
     )
+    found = doc_mentions(extract_mentions(spans, gazetteer, pattern=pattern))
+    return found.withColumn("doc_id", F.col("doc_id").cast(docs.schema["doc_id"].dataType))
 
 
 def _linked(
@@ -208,11 +233,10 @@ def _linked(
     alias_df = spark.createDataFrame(
         sorted(ALIASES.items()), "term string, entity string"
     )
-    return (
-        _mentions(spark, sf_dir, docs)
-        .join(F.broadcast(alias_df), "term")
-        .groupBy("doc_id", "entity")
-        .agg(F.sum("n").alias("n"))
+    return link_mentions(
+        _mentions(spark, sf_dir, docs),
+        alias_df,
+        skip_fuzzy=set(GAZETTEER) <= set(ALIASES),
     )
 
 
@@ -225,7 +249,7 @@ def _doc_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit('"'), F.col("lang"), F.lit('"')).alias("obj"),
     )
     mentions = _linked(spark, sf_dir, docs).select(
-        F.concat(F.lit("doc:"), F.col("doc_id").cast("string")).alias("subj"),
+        subj.alias("subj"),
         F.lit("mentions").alias("pred"),
         F.col("entity").alias("obj"),
     )
@@ -526,18 +550,11 @@ def q_kg_extract_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_kg_extract_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pattern-channel mention detection: regex hits per doc (S13 analog)."""
-    docs = _t(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    hits = F.regexp_extract_all(norm, F.lit(r"\b[a-z]*ar[a-z]*\b"), 0)
-    return (
-        docs.select("doc_id", F.explode(hits).alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").alias("n"))
-    )
+    return _mentions(spark, sf_dir, gazetteer=(), pattern=r"\b[a-z]*ar[a-z]*\b")
 
 
 def q_kg_link_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _linked(spark, sf_dir)
+    return _linked(spark, sf_dir).groupBy("doc_id", "entity").agg(F.sum("n").alias("n"))
 
 
 def q_kg_triples_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -566,40 +583,23 @@ def q_kg_canonicalize_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_kg_skew_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-phase salted aggregation over the (hot-key) predicate column.
-
-    Phase 1 groups by (pred, salt) so a hot predicate spreads over 16
-    reducers; phase 2 merges the 16 partials. The salted shuffle is the
-    skew treatment mandated by the north rule for rdf:type-like edges.
-    """
-    triples = _doc_triples(spark, sf_dir)
-    salted = triples.withColumn("salt", F.pmod(F.xxhash64("subj"), F.lit(16)))
-    partial = salted.groupBy("pred", "salt").agg(F.count("*").alias("pn"))
-    return partial.groupBy("pred").agg(F.sum("pn").alias("n"))
+    """Two-phase salted aggregation over the (hot-key) predicate column:
+    the shipped materialize-stage ``predicate_stats``."""
+    return predicate_stats(_doc_triples(spark, sf_dir)).select(
+        "pred", F.col("n_triples").alias("n")
+    )
 
 
 def q_spans_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """input_hint invariant: interleave → explode → reassemble == normalized text."""
+    """input_hint invariant: interleave → reassemble == normalized text."""
     docs = _t(spark, sf_dir, "documents")
-    corpus = interleave_documents(docs.select(F.col("doc_id").cast("string").alias("doc_id"), "text"))
-    spans = explode_spans(corpus)
-    rebuilt = (
-        spans.groupBy("doc_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct(F.col("offset").alias("o"), F.col("text").alias("t")))),
-                    lambda s: s["t"],
-                ),
-                " ",
-            ).alias("rebuilt")
-        )
-    )
+    doc_id = F.col("doc_id").cast("string").alias("doc_id")
+    rebuilt = reassemble(interleave_documents(docs.select(doc_id, "text")))
     norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    orig = docs.select(F.col("doc_id").cast("string").alias("doc_id"), norm.alias("norm"))
+    orig = docs.select(doc_id, norm.alias("norm"))
     return rebuilt.join(orig, "doc_id").select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        (F.col("rebuilt") == F.col("norm")).alias("ok"),
+        F.col("doc_id").cast(docs.schema["doc_id"].dataType).alias("doc_id"),
+        (F.col("text") == F.col("norm")).alias("ok"),
     )
 
 

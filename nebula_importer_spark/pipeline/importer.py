@@ -394,12 +394,14 @@ def _apply_spec(
             batch_cols.append(col.alias(f"p_{p.name}"))
     batch = values.select(*key_cols, *batch_cols, F.col(_SEQ_COL))
 
-    from pyspark.errors import AnalysisException
-
     table_path = f"{apply_path}/{kind}_{spec.name}"
-    try:
+    # ask the filesystem, not a failed read: a read of a missing path makes
+    # the query-execution listeners log its exception as a stack trace
+    hadoop_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(table_path)
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    if hadoop_path.getFileSystem(hadoop_conf).exists(hadoop_path):
         table = spark.read.parquet(table_path)
-    except AnalysisException:  # first run: empty table with this spec's schema
+    else:  # first run: empty table with this spec's schema
         table = spark.createDataFrame(
             [],
             StructType(

@@ -22,38 +22,6 @@ from pyspark.sql import DataFrame, SparkSession
 from nebula_importer_spark.sources.csv import records_from_columns
 
 
-def build_reader_options(
-    url: str,
-    table: str,
-    partition_column: str,
-    lower_bound: int,
-    upper_bound: int,
-    num_partitions: int,
-    fetch_size: int = 1000,
-    user: Optional[str] = None,
-    password: Optional[str] = None,
-) -> dict[str, str]:
-    """JDBC options replacing keyset pagination (sql.go:196-213).
-
-    ``num_partitions`` plays the role of the reference's reader concurrency;
-    ``fetch_size`` the per-roundtrip batch (manager.batch analog).
-    """
-    opts = {
-        "url": url,
-        "dbtable": table,
-        "partitionColumn": partition_column,
-        "lowerBound": str(lower_bound),
-        "upperBound": str(upper_bound),
-        "numPartitions": str(num_partitions),
-        "fetchsize": str(fetch_size),
-    }
-    if user is not None:
-        opts["user"] = user
-    if password is not None:
-        opts["password"] = password
-    return opts
-
-
 def options_from_sql_config(
     sql: dict, num_partitions: int = 1, bounds: Optional[tuple[int, int]] = None
 ) -> dict[str, str]:
@@ -87,22 +55,17 @@ def options_from_sql_config(
 
 def read_records_jdbc(
     spark: SparkSession,
+    jdbc_options: dict[str, str],
     columns: Optional[Sequence[str]] = None,
-    jdbc_options: Optional[dict] = None,
-    **options: object,
 ) -> DataFrame:
     """Read a JDBC table into the ``record: array<string>`` shape.
 
-    Pass either prebuilt ``jdbc_options`` (e.g. from
-    :func:`options_from_sql_config`) or the :func:`build_reader_options`
-    keyword surface. ``columns`` ordering defines the record positions
-    (``dbTable.fields``, sql.go:33); None keeps the table's column order.
+    ``jdbc_options`` are Spark's JDBC reader options, e.g. from
+    :func:`options_from_sql_config`. ``columns`` ordering defines the record
+    positions (``dbTable.fields``, sql.go:33); None keeps the table's column
+    order.
     """
-    reader = spark.read.format("jdbc")
-    opts = jdbc_options if jdbc_options is not None else build_reader_options(**options)  # type: ignore[arg-type]
-    for k, v in opts.items():
-        reader = reader.option(k, v)
-    df = reader.load()
+    df = spark.read.format("jdbc").options(**jdbc_options).load()
     if columns:
         df = df.select(*columns)
     return records_from_columns(df)

@@ -30,6 +30,10 @@ SUBSET = [
     "dedup_minhash_lsh",
     "dedup_embedding_lsh",
     "ann_lsh_topk",
+    "kg_extract_mentions",
+    "kg_extract_pattern",
+    "kg_link_alias",
+    "kg_triples_docs",
     "kg_skew_twophase",
     "kg_canonicalize_lsh",
     "kg_pagerank",

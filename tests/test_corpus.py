@@ -115,3 +115,33 @@ def test_synthetic_corpus_has_near_duplicates(spark):
             if diff <= 1:
                 near += 1
     assert near >= 3
+
+
+def _operators(df) -> list[str]:
+    """Physical operator lines of ``df``'s (pre-AQE) executed plan."""
+    tree = df._jdf.queryExecution().executedPlan().treeString()
+    return [line.lstrip(" :+-") for line in tree.splitlines()]
+
+
+def test_spans_roundtrip_plan_reassembles_without_shuffle(spark):
+    """The contract's round trip runs the shipped ``reassemble``: spans are
+    sorted inside one projection per document, so the plan holds no
+    aggregate and no exchange keyed on the document id."""
+    from nebula_importer_spark.contract import QUERIES
+
+    ops = _operators(QUERIES["spans_roundtrip"](spark, "/root/testdata/sf0.001"))
+    assert not [op for op in ops if "Aggregate" in op.split(" ")[0]]
+    assert not [op for op in ops if "hashpartitioning(doc_id" in op]
+
+
+def test_multimodal_features_plan_is_narrow(spark):
+    """interleave → explode → decode pipelines with the scan: no sort, and
+    the only exchange is the input re-spread's round-robin."""
+    from nebula_importer_spark.contract import QUERIES
+
+    ops = _operators(QUERIES["multimodal_features"](spark, "/root/testdata/sf0.001"))
+    names = [op.split(" ")[0] for op in ops]
+    assert "MapInPandas" in names
+    assert not [n for n in names if "Sort" in n]
+    exchanges = [op for op in ops if op.startswith("Exchange")]
+    assert exchanges and all("RoundRobinPartitioning" in op for op in exchanges)

@@ -269,3 +269,41 @@ def test_apply_update_missing_key_counts_failed_and_exits_1(tmp_path, capsys):
     assert payload["specs"][0]["failed"] == 2
     assert payload["specs"][0]["table_rows"] == 2  # table unchanged in size
     assert "failed to import" in out.err
+
+
+def test_first_apply_probes_table_without_failed_read(spark, tmp_path):
+    """A first apply run learns that the table is absent from the
+    filesystem, not from a failed ``spark.read.parquet``: the failed read's
+    query-execution listener logged a ~100-line "Listener threw an
+    exception" stack trace on every first run. The driver log is the JVM's
+    stderr, so the run happens in a fresh CLI process.
+
+    A table directory that exists but holds no readable files is not a
+    first run: the read raises instead of overwriting it with an empty
+    table."""
+    import os
+    import subprocess
+    import sys
+
+    from pyspark.errors import AnalysisException
+
+    (tmp_path / "p.csv").write_text("1,a,10\n")
+    (tmp_path / "c.yaml").write_text(
+        _cfg(tmp_path, "p.csv", PERSON_SPEC.format(mode="UPSERT"))
+    )
+    proc = subprocess.run(
+        [sys.executable, "-m", "nebula_importer_spark", "-c", str(tmp_path / "c.yaml"),
+         "--apply-to", str(tmp_path / "store"), "--master", "local[1]", "--json"],
+        capture_output=True, text=True, timeout=300,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "Listener threw an exception" not in proc.stderr
+    assert (tmp_path / "store" / "tag_person").is_dir()
+
+    (tmp_path / "empty" / "tag_person").mkdir(parents=True)
+    with pytest.raises(AnalysisException):
+        _run(
+            spark, tmp_path, "p.csv", ["1,a,10"], PERSON_SPEC.format(mode="UPSERT"),
+            apply_path=str(tmp_path / "empty"),
+        )

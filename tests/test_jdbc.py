@@ -1,24 +1,27 @@
 """JDBC source option mapping (S9: keyset pagination → range partitioning)."""
 
-from nebula_importer_spark.sources.jdbc import build_reader_options
+from nebula_importer_spark.sources.jdbc import options_from_sql_config
 
 
 def test_build_reader_options_range_partitioning():
-    opts = build_reader_options(
-        url="jdbc:mysql://db:3306/app",
-        table="users",
-        partition_column="id",
-        lower_bound=0,
-        upper_bound=1_000_000,
+    sql = {
+        "endpoint": "db:3306",
+        "dbName": "app",
+        "username": "u",
+        "password": "p",
+        "dbTable": {"name": "users", "id": {"name": "id"}},
+    }
+    opts = options_from_sql_config(
+        sql,
         num_partitions=50,   # reader-concurrency analog (manager.go:24)
-        fetch_size=128,      # batch analog (reader/option.go:7-9)
-        user="u",
-        password="p",
+        bounds=(0, 1_000_000),
     )
+    assert opts["url"] == "jdbc:mysql://db:3306/app"
+    assert opts["dbtable"] == "users"
     assert opts["partitionColumn"] == "id"
     assert opts["numPartitions"] == "50"
-    assert opts["fetchsize"] == "128"
     assert opts["lowerBound"] == "0" and opts["upperBound"] == "1000000"
+    assert opts["user"] == "u" and opts["password"] == "p"
 
 
 def test_jdbc_read_path_end_to_end_embedded_derby(spark):

@@ -29,10 +29,11 @@ COMMENTARY = {
         "is lost, the columnar-batch filter remains)."
     ),
     "kg_link_alias": (
-        "The alias dictionary joins as `BroadcastHashJoin BuildRight` — the "
-        "mention stream (big side) never shuffles for the join. The "
-        "aggregations show partial→Exchange→final HashAggregate pairs "
-        "(map-side combine)."
+        "Mentions come out of the extract's `MapInPandas` (Arrow batches, "
+        "no explode) and the alias dictionary joins as `BroadcastHashJoin "
+        "BuildRight` — the mention stream (big side) never shuffles for the "
+        "join. The aggregations show partial→Exchange→final HashAggregate "
+        "pairs (map-side combine)."
     ),
     "kg_skew_twophase": (
         "Hot-predicate counting: phase-1 `HashAggregate` keyed by "
