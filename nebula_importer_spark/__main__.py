@@ -34,6 +34,14 @@ def main(argv=None) -> int:
     p.add_argument("--json", action="store_true", help="print one JSON line instead of logs")
     args = p.parse_args(argv)
 
+    from nebula_importer_spark.sources.config import ConfigError, load_config
+
+    # a bad config fails here, before a session start costs seconds
+    try:
+        cfg = load_config(args.config)
+    except ConfigError as e:
+        p.error(str(e))
+
     from pyspark.sql import SparkSession
 
     from nebula_importer_spark.pipeline.importer import import_config
@@ -53,7 +61,7 @@ def main(argv=None) -> int:
     try:
         result = import_config(
             spark,
-            args.config,
+            cfg,
             base_dir=os.path.dirname(os.path.abspath(args.config)),
             output_path=args.output,
             apply_path=args.apply_to,

@@ -2,8 +2,8 @@
 
 These mirror the reference's ``pkg/picker`` + ``pkg/utils`` value pipeline
 (see each module's docstrings for file:line citations) but are implemented as
-Catalyst Column expressions so they run JVM-side inside whole-stage codegen —
-no per-row Python anywhere on the hot path.
+Catalyst Column expressions so they run JVM-side — no per-row Python
+anywhere on the hot path.
 """
 
 from nebula_importer_spark.functions.quoting import (
@@ -15,6 +15,7 @@ from nebula_importer_spark.functions.pickers import (
     PickerConfig,
     build_picker_column,
     quote_column,
+    register_go_quote,
 )
 from nebula_importer_spark.functions.filters import compile_filter
 
@@ -25,5 +26,6 @@ __all__ = [
     "PickerConfig",
     "build_picker_column",
     "quote_column",
+    "register_go_quote",
     "compile_filter",
 ]

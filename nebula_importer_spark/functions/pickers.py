@@ -4,8 +4,8 @@ Re-expresses the reference's picker/converter pipeline
 (``/root/reference/pkg/picker/config.go:31-129`` build order,
 ``converter_*.go`` conversion semantics) as a single Column expression over a
 ``record: array<string>`` column. Everything below is built-in
-``pyspark.sql.functions`` — JVM-side, whole-stage-codegen friendly; there is
-no Python in the per-row path.
+``pyspark.sql.functions`` or Spark SQL (the string quote) — JVM-side; there
+is no Python in the per-row path.
 
 Pipeline order (``pkg/picker/config.go:10-18``):
 
@@ -19,10 +19,11 @@ i.e. exactly what the reference splices into nGQL statements.
 
 from __future__ import annotations
 
+import weakref
 from dataclasses import dataclass, field
 from typing import Optional, Sequence, Union
 
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 from nebula_importer_spark.functions.quoting import UNSIGNED_INT_RE
@@ -73,48 +74,60 @@ def _elem(record: Column, index: int) -> Column:
     return F.coalesce(F.element_at(record, index + 1), F.lit(""))
 
 
-def quote_column(c: Column, exact: bool = False) -> Column:
-    """Go ``strconv.Quote`` as a Column expression.
+# Go's strconv.Quote as a temporary SQL function, which the analyzer inlines
+# at each call. A value that needs no \x, \u or \U escape (the guard: Go's
+# unicode.IsPrint admits letters, marks, numbers, punctuation, symbols and the
+# ASCII space; the short escapes \a..\r are excluded from it) takes the
+# replace chain: backslash, double-quote, then \a..\r. The rest are split
+# into code points, each written as strconv.Quote writes it. Every backslash
+# in the text is char(92): inside a SQL string literal a backslash reads
+# differently when spark.sql.parser.escapedStringLiterals is on, and the
+# function keeps the parser settings of the session that creates it.
+_NEEDS_HEX = r"[^\p{L}\p{M}\p{N}\p{P}\p{S} \x07-\x0d]"
+_HEX_GUARD = "('" + _NEEDS_HEX.replace("\\", "' || char(92) || '") + "')"
+_REPLACE_CHAIN = "s"
+for _search, _escape in [("char(92)", "char(92)"), ("'\"'", "'\"'")] + [
+    (f"char({7 + i})", f"'{e}'") for i, e in enumerate("abtnvfr")
+]:
+    _REPLACE_CHAIN = f"replace({_REPLACE_CHAIN}, {_search}, char(92) || {_escape})"
+_GO_QUOTE_SQL = f"""
+CREATE OR REPLACE TEMPORARY FUNCTION nis_go_quote(s STRING) RETURNS STRING RETURN
+'"' || CASE WHEN s RLIKE {_HEX_GUARD} THEN array_join(transform(
+  regexp_extract_all(s, '(?s)(.)', 1),
+  ch -> CASE
+    WHEN ch IN (char(92), '"') THEN char(92) || ch
+    WHEN ascii(ch) BETWEEN 7 AND 13 THEN char(92) || substr('abtnvfr', ascii(ch) - 6, 1)
+    WHEN ch RLIKE {_HEX_GUARD} THEN char(92) || format_string(CASE
+      WHEN ascii(ch) < 128 THEN 'x%02x' WHEN ascii(ch) < 65536 THEN 'u%04x'
+      ELSE 'U%08x' END, ascii(ch))
+    ELSE ch END), '')
+ELSE {_REPLACE_CHAIN} END || '"'
+"""
 
-    The default fast path covers backslash, double-quote, and the C0 short
-    escapes — the full set exercised by the reference's fixtures and
-    goldens — entirely JVM-side (whole-stage codegen). ``exact=True``
-    switches to an Arrow-batched pandas UDF over the byte-exact pure-Python
-    :func:`~nebula_importer_spark.functions.quoting.go_quote` (hex/unicode
-    escapes for every non-printable, e.g. ``\\x00`` → ``\\x00``, U+2028 →
-    ``\\u2028``) — use it when inputs may contain arbitrary control/format
-    codepoints and byte parity with ``strconv.Quote`` matters more than
-    staying in codegen.
+_go_quote_sessions: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
+
+
+def register_go_quote(spark: SparkSession) -> None:
+    """Create the SQL function behind :func:`quote_column` in ``spark``,
+    once per session. Temporary functions belong to one session, so call
+    this with the session of the DataFrame the quoted Columns go into
+    (``df.sparkSession``)."""
+    if spark not in _go_quote_sessions:
+        spark.sql(_GO_QUOTE_SQL)
+        _go_quote_sessions.add(spark)
+
+
+def quote_column(c: Column) -> Column:
+    """Go ``strconv.Quote`` as a Column expression, byte-exact with
+    :func:`~nebula_importer_spark.functions.quoting.go_quote` on every code
+    point the JVM's Unicode tables assign (JDK 17: Unicode 13).
+
+    JVM-side, no Python worker: a call of the SQL function ``nis_go_quote``,
+    which :func:`register_go_quote` creates in the DataFrame's session. Spark
+    accepts it in projections and filters, not inside a generator such as
+    ``explode``.
     """
-    if exact:
-        return _go_quote_udf()(c)
-    x = F.replace(c, F.lit("\\"), F.lit("\\\\"))
-    for ch, esc in (
-        ("\a", "\\a"),
-        ("\b", "\\b"),
-        ("\f", "\\f"),
-        ("\n", "\\n"),
-        ("\r", "\\r"),
-        ("\t", "\\t"),
-        ("\v", "\\v"),
-        ('"', '\\"'),
-    ):
-        x = F.replace(x, F.lit(ch), F.lit(esc))
-    return F.concat(F.lit('"'), x, F.lit('"'))
-
-
-def _go_quote_udf():
-    """Arrow-batched strconv.Quote UDF (built lazily: pandas_udf needs an
-    active session to parse its return type, so no module-import side
-    effects)."""
-    from nebula_importer_spark.functions.quoting import go_quote
-    from pyspark.sql.types import StringType
-
-    @F.pandas_udf(StringType())
-    def quote(s):
-        return s.map(lambda v: go_quote("" if v is None else v))
-
-    return quote
+    return F.call_function("nis_go_quote", c)
 
 
 def _nullish(c: Column) -> Column:
@@ -134,7 +147,7 @@ def _wrap(name: str, inner: Column) -> Column:
     return F.concat(F.lit(name + "("), inner, F.lit(")"))
 
 
-def convert_type_column(c: Column, type_: str, exact: bool = False) -> Column:
+def convert_type_column(c: Column, type_: str) -> Column:
     """Apply the reference's type conversion → rendered literal text.
 
     Semantics per type from ``pkg/picker/converter_type.go:59-132``,
@@ -152,22 +165,22 @@ def convert_type_column(c: Column, type_: str, exact: bool = False) -> Column:
             .otherwise(c)
         )
     if t in ("STRING", "FIXED_STRING") or t.startswith("FIXED_STRING"):
-        return quote_column(c, exact)
+        return quote_column(c)
     if t == "DATE":
         v = F.when(_nullish(c), F.lit("2000-01-01")).otherwise(c)
-        return _wrap("DATE", quote_column(v, exact))
+        return _wrap("DATE", quote_column(v))
     if t == "TIME":
         v = F.when(_nullish(c), F.lit("00:00:00.000000")).otherwise(c)
-        return _wrap("TIME", quote_column(_z_to_offset(v), exact))
+        return _wrap("TIME", quote_column(_z_to_offset(v)))
     if t == "DATETIME":
         v = F.when(_nullish(c), F.lit(DATETIME_NULL_DEFAULT)).otherwise(c)
-        return _wrap("DATETIME", quote_column(_z_to_offset(v), exact))
+        return _wrap("DATETIME", quote_column(_z_to_offset(v)))
     if t == "TIMESTAMP":
         return F.when(c.rlike(UNSIGNED_INT_RE), _wrap("TIMESTAMP", c)).otherwise(
-            _wrap("TIMESTAMP", quote_column(c, exact))
+            _wrap("TIMESTAMP", quote_column(c))
         )
     if t.startswith("GEOGRAPHY"):
-        return _wrap("ST_GeogFromText", quote_column(c, exact))
+        return _wrap("ST_GeogFromText", quote_column(c))
     raise UnsupportedValueTypeError(f"unsupported value type: {type_}")
 
 
@@ -188,9 +201,6 @@ class PickerConfig:
     default_value: Optional[str] = None
     type: str = "STRING"
     function: Optional[str] = None
-    # use the byte-exact strconv.Quote pandas UDF instead of the codegen
-    # fast path (arbitrary non-printables; see quote_column)
-    exact_quote: bool = False
 
     def validate(self) -> None:
         if self.type.upper() not in _SUPPORTED_TYPES:
@@ -245,14 +255,14 @@ def build_picker_column(cfg: PickerConfig, record: Column) -> Column:
         picked = F.when(is_null, F.lit(cfg.default_value)).otherwise(picked)
         is_null = F.lit(False)
 
-    converted = convert_type_column(picked, cfg.type, cfg.exact_quote)
+    converted = convert_type_column(picked, cfg.type)
 
     if cfg.function:
         if cfg.type.upper() in ("STRING", "FIXED_STRING"):
             # value already quoted by the STRING type converter
             converted = _wrap(cfg.function, converted)
         else:
-            converted = _wrap(cfg.function, quote_column(converted, cfg.exact_quote))
+            converted = _wrap(cfg.function, quote_column(converted))
 
     if nullable:
         return F.when(is_null, F.lit(cfg.null_value)).otherwise(converted)

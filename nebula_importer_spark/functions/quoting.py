@@ -2,9 +2,18 @@
 
 Pure-Python, byte-compatible re-implementations of the reference's rendering
 helpers (semantics from ``/root/reference/pkg/utils/string.go:15-64`` and Go's
-``strconv.Quote`` used at ``pkg/picker/converter_type.go:122-125``). The
-pure-Python forms are used in tests and pandas-UDF paths; the Column forms in
-:mod:`nebula_importer_spark.functions.pickers` are the JVM-side hot path.
+``strconv.Quote`` used at ``pkg/picker/converter_type.go:122-125``).
+
+:func:`go_quote` is the test oracle only: rows are quoted by the JVM-side
+:func:`nebula_importer_spark.functions.pickers.quote_column`, which the tests
+check against it. The two classify printable characters with different
+Unicode tables (Python's ``unicodedata``, 14.0 on Python 3.11; the JVM's
+regex classes, Unicode 13 on JDK 17), so they agree on every code point the
+JVM assigns. The 836 code points assigned after Unicode 13 are escaped by the
+JVM and kept by ``go_quote``; Go's own tables decide for the reference.
+:func:`convert_identifier` renders identifiers when the specs build
+statement text, and ``UNSIGNED_INT_RE`` is the Column form of
+:func:`is_unsigned_integer`.
 """
 
 from __future__ import annotations

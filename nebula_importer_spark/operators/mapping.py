@@ -4,7 +4,7 @@ This is the DataFrame re-expression of the reference's statement builders
 (``/root/reference/pkg/spec/v3/node.go:163-272``, ``edge.go:208-372``): the
 per-record filter, VID/prop pick+convert, and the per-record statement
 *fragment* are all compiled to Column expressions, so the entire map runs
-JVM-side in one whole-stage-codegen pass with zero shuffles. Statement
+JVM-side as narrow projections with zero shuffles. Statement
 assembly (grouping fragments into ≤batch statements) lives in
 :mod:`nebula_importer_spark.operators.statements`.
 
@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nebula_importer_spark.functions.filters import compile_filter
-from nebula_importer_spark.functions.pickers import build_picker_column
+from nebula_importer_spark.functions.pickers import build_picker_column, register_go_quote
 from nebula_importer_spark.plans.specs import EdgeSpec, Mode, NodeSpec
 
 RECORD_COL = "record"
@@ -76,6 +76,7 @@ def node_values(
     """
     spec.complete()
     spec.validate()
+    register_go_quote(df.sparkSession)
     record = F.col(record_col)
     df = _apply_filter(df, spec.filter, record)
 
@@ -119,6 +120,7 @@ def edge_values(
     """
     spec.complete()
     spec.validate()
+    register_go_quote(df.sparkSession)
     record = F.col(record_col)
     df = _apply_filter(df, spec.filter, record)
 

@@ -47,6 +47,7 @@ from nebula_importer_spark.operators.statements import (
     assemble_statements,
 )
 from nebula_importer_spark.plans.specs import EdgeSpec, NodeSpec
+from nebula_importer_spark.session import path_exists
 from nebula_importer_spark.sources.config import (
     ImporterConfig,
     SourceConfig,
@@ -395,11 +396,7 @@ def _apply_spec(
     batch = values.select(*key_cols, *batch_cols, F.col(_SEQ_COL))
 
     table_path = f"{apply_path}/{kind}_{spec.name}"
-    # ask the filesystem, not a failed read: a read of a missing path makes
-    # the query-execution listeners log its exception as a stack trace
-    hadoop_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(table_path)
-    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
-    if hadoop_path.getFileSystem(hadoop_conf).exists(hadoop_path):
+    if path_exists(spark, table_path):
         table = spark.read.parquet(table_path)
     else:  # first run: empty table with this spec's schema
         table = spark.createDataFrame(

@@ -28,6 +28,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nebula_importer_spark.session import path_exists
+
 
 def with_bucket(df: DataFrame, n_buckets: int, id_col: str = "doc_id") -> DataFrame:
     return df.withColumn(
@@ -46,11 +48,15 @@ class Checkpoint:
         return os.path.join(self.path, "lineage")
 
     def completed_buckets(self, spark: SparkSession) -> list[int]:
-        try:
-            df = spark.read.parquet(self.lineage_path)
-        except Exception:  # noqa: BLE001 — first run: no checkpoint yet
+        """Buckets with a lineage row; none on a first run (no table yet).
+
+        A lineage table that exists but cannot be read raises: reading it as
+        "nothing done" would silently reprocess every bucket.
+        """
+        if not path_exists(spark, self.lineage_path):
             return []
-        return [r.bucket for r in df.select("bucket").dropDuplicates().collect()]
+        df = spark.read.schema("bucket int").parquet(self.lineage_path)
+        return [r.bucket for r in df.dropDuplicates().collect()]
 
     def record(
         self,
@@ -80,10 +86,9 @@ class Checkpoint:
 
 def write_partitioned(df: DataFrame, path: str, partition_col: str = "bucket") -> None:
     """Idempotent bucket-partitioned write (dynamic partition overwrite)."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(path)
+    )

@@ -66,9 +66,6 @@ class PropSpec:
     # fork-added per-prop guard; env val = the full "name = value" clause
     # (prop.go:69-75,130-153); false ⇒ drop this SET clause on UPDATE/UPSERT
     expr: Optional[str] = None
-    # byte-exact strconv.Quote rendering (pandas-UDF slow path) for inputs
-    # with arbitrary non-printables; default stays in whole-stage codegen
-    exact_quote: bool = False
 
     def complete(self) -> None:
         if not self.type:
@@ -99,7 +96,6 @@ class PropSpec:
             null_value=NULL_RENDER,
             default_value=default,
             type=self.type,
-            exact_quote=self.exact_quote,
         )
 
 
@@ -111,7 +107,6 @@ class NodeIDSpec:
     index: int = 0
     concat_items: Sequence[Union[int, str]] = field(default_factory=list)
     function: Optional[str] = None  # only HASH supported (nodeid.go:10-12)
-    exact_quote: bool = False  # see PropSpec.exact_quote
 
     def complete(self) -> None:
         if not self.type:
@@ -125,10 +120,7 @@ class NodeIDSpec:
 
     def picker_config(self) -> PickerConfig:
         """Mirror of ``nodeid.go:70-84`` initPicker."""
-        cfg = PickerConfig(
-            type=self.type, function=self.function or None,
-            exact_quote=self.exact_quote,
-        )
+        cfg = PickerConfig(type=self.type, function=self.function or None)
         if self.concat_items:
             cfg.concat_items = list(self.concat_items)
         else:

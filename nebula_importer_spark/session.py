@@ -98,3 +98,14 @@ def get_spark(
             "spark.eventLog.dir", os.environ["SPARK_GRAFT_EVENTLOG"]
         )
     return builder.getOrCreate()
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, asked of its Hadoop filesystem.
+
+    Ask before reading a path that may be missing: a failed read makes the
+    query-execution listeners log its exception as a stack trace.
+    """
+    hadoop_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return hadoop_path.getFileSystem(hadoop_conf).exists(hadoop_path)

@@ -246,6 +246,9 @@ def load_config(path_or_text: str) -> ImporterConfig:
             raw = yaml.load(f, Loader=_StrLoader)
     else:
         raw = yaml.load(path_or_text, Loader=_StrLoader)
+        if "\n" not in path_or_text and not isinstance(raw, (dict, list)):
+            # a bare scalar on one line is a path, not a config
+            raise ConfigError(f"config file not found: {path_or_text}")
     if not isinstance(raw, dict):
         raise ConfigError("config root must be a mapping")
 

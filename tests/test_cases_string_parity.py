@@ -39,7 +39,8 @@ def test_course_tag_quoted_vids_and_unicode(spark):
     frags = set(_fragments(df, spec))
     assert '"x101":("Math", 3)' in frags
     assert '"z103":("Chinese", 1)' in frags            # quoted VID unwrapped
-    assert '"000test":("中国（　　）", 5)' in frags  # non-ASCII preserved
+    # printable non-ASCII kept, U+3000 escaped as strconv.Quote does
+    assert '"000test":("中国（\\u3000\\u3000）", 5)' in frags
     assert len(frags) == 7
 
 

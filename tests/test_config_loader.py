@@ -130,6 +130,9 @@ def test_bad_configs_raise():
         load_config("manager:\n  statsInterval: nonsense\n")
     with pytest.raises(ConfigError):  # a source no tag or edge reads
         load_config("sources:\n  - path: ./x.csv\n")
+    # a one-line argument that is no file and parses to a scalar is a path
+    with pytest.raises(ConfigError, match="config file not found: /no/such/c.yaml"):
+        load_config("/no/such/c.yaml")
 
 
 def test_duration_and_defaults():

@@ -189,3 +189,30 @@ sources:
         assert sum(r.n_records for r in rows) == spec.n_records
         assert spec.n_statements == spec.statements.count() == len(rows)
         assert all(f"`student`({props})" in r.statement for r in rows)
+
+
+def test_cli_missing_config_fails_before_session(tmp_path):
+    """A config path that does not exist fails naming the path, and the CLI
+    never launches a Spark JVM for it."""
+    import os
+    import subprocess
+    import sys
+
+    missing = tmp_path / "nope.yaml"
+    code = (
+        "import sys\n"
+        "from pyspark import SparkContext\n"
+        "from nebula_importer_spark.__main__ import main\n"
+        "try:\n"
+        "    main(['-c', sys.argv[1]])\n"
+        "finally:\n"
+        "    assert SparkContext._gateway is None, 'a Spark JVM was launched'\n"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code, str(missing)],
+        capture_output=True, text=True, timeout=120,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert proc.returncode == 2, proc.stderr[-2000:]
+    assert f"config file not found: {missing}" in proc.stderr
+    assert "a Spark JVM was launched" not in proc.stderr

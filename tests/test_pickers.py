@@ -15,6 +15,7 @@ from nebula_importer_spark.functions.pickers import (
     PickerConfig,
     UnsupportedValueTypeError,
     build_picker_column,
+    register_go_quote,
 )
 
 from tests.conftest import records_df
@@ -22,6 +23,7 @@ from tests.conftest import records_df
 
 def pick(spark, cfg: PickerConfig, record: list[str]) -> str:
     df = records_df(spark, [record])
+    register_go_quote(df.sparkSession)
     return df.select(build_picker_column(cfg, F.col("record")).alias("v")).head()[0]
 
 

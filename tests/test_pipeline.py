@@ -3,6 +3,8 @@ multimodal plumbing, and the end-to-end run."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -15,7 +17,7 @@ from nebula_importer_spark.pipeline.canonicalize import (
 )
 from nebula_importer_spark.pipeline.corpus import explode_spans, interleave_documents, synthetic_corpus
 from nebula_importer_spark.pipeline.extract import doc_mentions, extract_mentions
-from nebula_importer_spark.pipeline.lineage import Checkpoint, with_bucket
+from nebula_importer_spark.pipeline.lineage import Checkpoint, with_bucket, write_partitioned
 from nebula_importer_spark.pipeline.link import link_mentions
 from nebula_importer_spark.pipeline.multimodal import decode_media, media_table
 from nebula_importer_spark.pipeline.run import run_pipeline
@@ -188,6 +190,31 @@ def test_lineage_resume_idempotent(spark, tmp_path):
     run_pipeline(spark, corpus, checkpoint=ckpt, output_path=out, n_buckets=n_buckets)
     again = spark.read.parquet(out).select("subj", "pred", "obj", "bucket")
     assert again.exceptAll(clean).count() == 0
+
+
+def test_completed_buckets_missing_table_is_empty_corrupt_raises(spark, tmp_path):
+    """No lineage table means a first run; an unreadable one is an error,
+    not "nothing done" (which would reprocess every bucket)."""
+    ckpt = Checkpoint(str(tmp_path / "ckpt"))
+    assert ckpt.completed_buckets(spark) == []
+    os.makedirs(ckpt.lineage_path)
+    with open(os.path.join(ckpt.lineage_path, "part-0.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception, match="parquet|Parquet"):
+        ckpt.completed_buckets(spark)
+
+
+def test_write_partitioned_replaces_only_written_buckets(spark, tmp_path):
+    """Dynamic overwrite per write: the session's overwrite mode is not
+    touched, and buckets absent from a write keep their files."""
+    conf_key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(conf_key)
+    out = str(tmp_path / "out")
+    write_partitioned(spark.createDataFrame([(0, "a"), (1, "b")], "bucket int, v string"), out)
+    write_partitioned(spark.createDataFrame([(1, "c")], "bucket int, v string"), out)
+    assert spark.conf.get(conf_key) == before
+    got = sorted((r.bucket, r.v) for r in spark.read.parquet(out).collect())
+    assert got == [(0, "a"), (1, "c")]
 
 
 def test_run_pipeline_end_to_end_with_fixture_replay(spark):

@@ -62,25 +62,64 @@ def test_is_unsigned_integer():
 
 
 def test_exact_quote_column_end_to_end(spark):
-    """exact_quote renders via go_quote (pandas UDF): byte parity with
-    strconv.Quote on arbitrary non-printables the codegen fast path
-    passes through raw."""
+    """quote_column renders arbitrary non-printables byte-equal to
+    strconv.Quote (hex and unicode escapes) through node_values and
+    assemble_statements, for every quoting prop type, with no Python
+    evaluation node in the plan."""
+    from nebula_importer_spark.operators.mapping import node_values
+    from nebula_importer_spark.operators.statements import assemble_statements
+    from nebula_importer_spark.plans.specs import NodeIDSpec, NodeSpec, PropSpec
+    from tests.conftest import records_df
+
+    typed = ("DATE", "DATETIME", "TIMESTAMP", "GEOGRAPHY")
+    spec = NodeSpec(
+        name="t",
+        id=NodeIDSpec(type="INT", index=0),
+        props=[PropSpec("p", "STRING", 1)] + [PropSpec(t.lower(), t, 2) for t in typed],
+    )
+    rows = [["1", "nul\x00byte"], ["2", "line\u2028sep"], ["3", "del\x7f"], ["4", "中国（　　）"],
+            ["5", 'tab\there "\\"']]
+    df = records_df(spark, [r + ["2020-01-02\u3000"] for r in rows])
+    values = node_values(df, spec)
+    plan = values._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    got = {r.vid: r for r in values.collect()}
+    assert got["1"].p_p == '"nul\\x00byte"'
+    assert got["2"].p_p == '"line\\u2028sep"'
+    assert got["3"].p_p == '"del\\x7f"'
+    assert got["4"].p_p == '"中国（\\u3000\\u3000）"'
+    assert got["5"].p_p == '"tab\\there \\"\\\\\\""'
+    assert [got["1"][f"p_{t.lower()}"] for t in typed] == [
+        'DATE("2020-01-02\\u3000")',
+        'DATETIME("2020-01-02\\u3000")',
+        'TIMESTAMP("2020-01-02\\u3000")',
+        'ST_GeogFromText("2020-01-02\\u3000")',
+    ]
+    # the course.csv string in its assembled statement
+    statements = [r.statement for r in assemble_statements(values, spec, batch=1).collect()]
+    assert (
+        "INSERT VERTEX IGNORE_EXISTED_INDEX `t`(`p`, `date`, `datetime`, `timestamp`, "
+        '`geography`) VALUES 4:("中国（\\u3000\\u3000）", DATE("2020-01-02\\u3000"), '
+        'DATETIME("2020-01-02\\u3000"), TIMESTAMP("2020-01-02\\u3000"), '
+        'ST_GeogFromText("2020-01-02\\u3000"))'
+    ) in statements
+    # and the oracle quotes every input
+    for r in rows:
+        assert go_quote(r[1]).startswith('"')
+
+
+def test_quote_in_new_session_with_escaped_string_literals(spark):
+    """node_values quotes in the session that owns the DataFrame, whatever
+    its string-literal parser setting."""
     from nebula_importer_spark.operators.mapping import node_values
     from nebula_importer_spark.plans.specs import NodeIDSpec, NodeSpec, PropSpec
     from tests.conftest import records_df
 
-    spec = NodeSpec(
-        name="t",
-        id=NodeIDSpec(type="INT", index=0),
-        props=[PropSpec("p", "STRING", 1, exact_quote=True)],
-    )
-    rows = [["1", "nul\x00byte"], ["2", "line\u2028sep"], ["3", "del\x7f"], ["4", "中国（　　）"]]
-    df = records_df(spark, rows)
-    got = {r.vid: r.p_p for r in node_values(df, spec).collect()}
-    assert got["1"] == '"nul\\x00byte"'
-    assert got["2"] == '"line\\u2028sep"'
-    assert got["3"] == '"del\\x7f"'
-    assert got["4"] == '"中国（\\u3000\\u3000）"'
-    # same strings through the fast path: C0 escapes only, exotics raw
-    for r in rows:
-        assert go_quote(r[1]).startswith('"')
+    other = spark.newSession()
+    other.conf.set("spark.sql.parser.escapedStringLiterals", "true")
+    spec = NodeSpec(name="t", id=NodeIDSpec(index=0), props=[PropSpec("p", "STRING", 1)])
+    text = 'back\\slash "q"\tnul\x00 中国（　）'
+    df = records_df(other, [["k", text]])
+    records_df(spark, [["x"]])  # the test session is the active one again
+    (row,) = node_values(df, spec).collect()
+    assert (row.vid, row.p_p) == (go_quote("k"), go_quote(text))

@@ -15,11 +15,16 @@ sys.path.insert(0, REPO)
 
 COMMENTARY = {
     "map_vertex_insert": (
-        "Mapping core is a single narrow projection: one `Scan parquet` with "
-        "ReadSchema pruned to exactly the 5 consumed columns, one "
-        "whole-stage-codegen Project rendering every literal JVM-side, one "
-        "Generate (explode) for the per-prop triples. Zero shuffles — at "
-        "100 TB this pipelines with the scan at I/O speed."
+        "Mapping core is a narrow projection: one `Scan parquet` with "
+        "ReadSchema pruned to exactly the 5 consumed columns, two Projects "
+        "rendering every literal JVM-side, one Generate (explode) for the "
+        "per-prop triples. The lower Project picks each value; the upper "
+        "one quotes them (the inlined SQL function `nis_go_quote`). The "
+        "quote's escape branch is a `transform` lambda, which has no "
+        "generated code, so that Project runs outside whole-stage codegen; "
+        "an RLIKE guard keeps the per-character work off every value that "
+        "needs no `\\x`, `\\u` or `\\U` escape (such values take a replace "
+        "chain). No Python evaluation node and no shuffle of its own."
     ),
     "map_vertex_filter": (
         "The reference's expr-lang filter compiles to a Catalyst boolean "
@@ -144,7 +149,12 @@ def main() -> None:
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
-        plan = buf.getvalue()
+        # control-character literals (the quote's replace chain) print raw:
+        # escape them so each plan line stays one line; no plan line starts
+        # with ", ", so a newline before one is a literal's
+        plan = buf.getvalue().replace("\n, ", "\\n, ").translate(
+            {7: "\\a", 8: "\\b", 9: "\\t", 11: "\\v", 12: "\\f", 13: "\\r"}
+        )
         # keep the operator tree + scan details; drop verbose per-node dumps
         tree, _, details = plan.partition("\n\n")
         keep_details = "\n".join(
