@@ -20,14 +20,14 @@ text is only needed to prove mapping parity with the reference's test suite.
 
 from __future__ import annotations
 
-from typing import Iterator, Union
+from typing import Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
-from nebula_importer_spark.plans.specs import EdgeSpec, Mode, NodeSpec
+from nebula_importer_spark.plans.specs import GraphSpec, Mode
 
 STATEMENT_SCHEMA = StructType(
     [
@@ -41,21 +41,21 @@ DEFAULT_BATCH = 128  # pkg/reader/option.go:7-9
 
 def assemble_statements(
     values: DataFrame,
-    spec: Union[NodeSpec, EdgeSpec],
+    spec: GraphSpec,
     batch: int = DEFAULT_BATCH,
 ) -> DataFrame:
     """Group rendered fragments into ≤``batch``-record statements.
 
-    ``values`` must carry a ``fragment`` column (from ``node_values`` /
-    ``edge_values``). Returns (statement, n_records) rows.
+    ``values`` must carry a ``fragment`` column (from
+    ``mapping.spec_values``). Returns (statement, n_records) rows.
     """
     spec.complete()  # idempotent prefix constant-folding (node.go:87-123)
-    mode = Mode.convert(spec.mode)
-    is_edge = isinstance(spec, EdgeSpec)
-    if mode == Mode.INSERT or (mode == Mode.DELETE and is_edge):
+    if spec.mode == Mode.INSERT or (
+        spec.mode == Mode.DELETE and spec.delete_shares_prefix
+    ):
         prefix, sep = spec.statement_prefix, ", "
     else:
-        # UPDATE/UPSERT and node-DELETE fragments are full statements
+        # UPDATE/UPSERT and unshared-DELETE fragments are full statements
         # already carrying their own prefix (node.go:231-236,263-266).
         prefix, sep = "", ""
 

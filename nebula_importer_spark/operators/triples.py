@@ -12,8 +12,10 @@ Subjects/objects/values are the *rendered literals* (quoted strings, typed
 wrappers), so string-VID and int-VID spaces stay distinct and P/R comparison
 against the reference mapping is exact.
 
-Implemented as one explode over a per-row literal array — a single narrow
-projection, no shuffle, fully JVM-side.
+One body serves both kinds: the spec gives the head triple and its rendered
+key, which is every prop triple's subject. Implemented as one explode over a
+per-row array of (subj, pred, obj) structs — a single narrow projection, no
+shuffle, fully JVM-side.
 """
 
 from __future__ import annotations
@@ -21,68 +23,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nebula_importer_spark.plans.specs import EdgeSpec, NodeSpec
+from nebula_importer_spark.plans.specs import GraphSpec
 
 TRIPLE_COLS = ("subj", "pred", "obj")
 
 
-def node_triples(values: DataFrame, spec: NodeSpec, keep: tuple = ()) -> DataFrame:
-    """(vid, "tag:<name>", NULL) + per-prop triples from ``node_values``."""
+def spec_triples(values: DataFrame, spec: GraphSpec, keep: tuple = ()) -> DataFrame:
+    """The spec's head triple + one ``(key, "<name>.<prop>", value)`` per
+    prop, from ``mapping.spec_values`` output."""
+    key = spec.key()
     entries = [
-        F.struct(
-            F.lit(f"tag:{spec.name}").alias("pred"),
-            F.lit("NULL").alias("obj"),
-        )
+        F.struct(*(c.alias(n) for c, n in zip(spec.head_triple(), TRIPLE_COLS)))
     ]
     for p in spec.props:
         entries.append(
             F.struct(
+                key.alias("subj"),
                 F.lit(f"{spec.name}.{p.name}").alias("pred"),
                 F.col(f"p_{p.name}").alias("obj"),
             )
         )
-    exploded = values.select(
-        F.col("vid").alias("subj"), F.explode(F.array(*entries)).alias("e"), *keep
-    )
-    return exploded.select(
-        "subj", F.col("e.pred").alias("pred"), F.col("e.obj").alias("obj"), *keep
-    )
+    exploded = values.select(F.explode(F.array(*entries)).alias("e"), *keep)
+    return exploded.select(*(f"e.{c}" for c in TRIPLE_COLS), *keep)
 
 
-def edge_triples(values: DataFrame, spec: EdgeSpec, keep: tuple = ()) -> DataFrame:
-    """(src, "<edge>[@rank]", dst) + per-prop triples from ``edge_values``."""
-    has_rank = spec.rank is not None
-    rank_suffix = (
-        F.concat(F.lit("@"), F.col("rank")) if has_rank else F.lit("")
-    )
-    pred = F.concat(F.lit(spec.name), rank_suffix)
-    edge_key = F.concat(F.col("src"), F.lit("->"), F.col("dst"), rank_suffix)
-
-    entries = [
-        F.struct(
-            edge_key.alias("subj"),
-            pred.alias("pred"),
-            F.col("dst").alias("obj"),
-            F.lit(True).alias("is_endpoint"),
-        )
-    ]
-    for p in spec.props:
-        entries.append(
-            F.struct(
-                edge_key.alias("subj"),
-                F.lit(f"{spec.name}.{p.name}").alias("pred"),
-                F.col(f"p_{p.name}").alias("obj"),
-                F.lit(False).alias("is_endpoint"),
-            )
-        )
-    exploded = values.select(
-        F.col("src").alias("src_vid"), F.explode(F.array(*entries)).alias("e"), *keep
-    )
-    return exploded.select(
-        F.when(F.col("e.is_endpoint"), F.col("src_vid"))
-        .otherwise(F.col("e.subj"))
-        .alias("subj"),
-        F.col("e.pred").alias("pred"),
-        F.col("e.obj").alias("obj"),
-        *keep,
-    )
+#: the one body under each kind's public name
+node_triples = edge_triples = spec_triples

@@ -31,6 +31,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nebula_importer_spark.operators.dedup import normalized_text
+
 SPAN_SCHEMA = T.StructType(
     [
         T.StructField("kind", T.StringType(), False),
@@ -74,7 +76,7 @@ def interleave_documents(
     span texts in offset order reproduces the normalized document text —
     the round-trip invariant. Column-native: transform over a sequence.
     """
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
+    norm = normalized_text(F.col(text_col))
     toks = F.split(norm, " ")
     n_chunks = F.ceil(F.size(toks) / F.lit(chunk_words)).cast("int")
     salt = F.length(norm)  # deterministic per-doc phase for kind cycling

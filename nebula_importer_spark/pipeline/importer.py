@@ -36,17 +36,17 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
-from typing import List, Optional, Union
+from typing import Callable, List, Optional, Union
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from nebula_importer_spark.operators.mapping import edge_values, node_values
+from nebula_importer_spark.operators.mapping import edge_values, guard_clause, node_values
 from nebula_importer_spark.operators.statements import (
     STATEMENT_SCHEMA,
     assemble_statements,
 )
-from nebula_importer_spark.plans.specs import EdgeSpec, NodeSpec
+from nebula_importer_spark.plans.specs import GraphSpec, Mode
 from nebula_importer_spark.session import path_exists
 from nebula_importer_spark.sources.config import (
     ImporterConfig,
@@ -249,8 +249,10 @@ def import_config(
             records, obs, counts_raw = read_source_accounted(
                 spark, src, base_dir=base_dir
             )
-            specs = [("tag", s) for s in src.nodes] + [
-                ("edge", s) for s in src.edges
+            # one body maps both kinds; each is called by its own public
+            # name, the one a tracer of the mapping layer wraps
+            specs = [(node_values, s) for s in src.nodes] + [
+                (edge_values, s) for s in src.edges
             ]
             if apply_path is not None:
                 # statement order within the source, for apply-mode
@@ -263,10 +265,10 @@ def import_config(
             if len(specs) > 1:
                 records = records.persist()  # one scan, many importers
             try:
-                for j, (kind, spec) in enumerate(specs):
+                for j, (values_of, spec) in enumerate(specs):
                     result.specs.append(
                         _run_spec(
-                            spark, records, src, f"{i}_{j}", kind, spec,
+                            spark, records, src, f"{i}_{j}", values_of, spec,
                             batch=src.batch or cfg.batch,
                             output_path=output_path,
                             apply_path=apply_path,
@@ -302,25 +304,21 @@ def _run_spec(
     records: DataFrame,
     src: SourceConfig,
     spec_key: str,
-    kind: str,
-    spec: Union[NodeSpec, EdgeSpec],
+    values_of: Callable[..., DataFrame],
+    spec: GraphSpec,
     batch: int,
     output_path: Optional[str],
     apply_path: Optional[str] = None,
 ) -> SpecResult:
     keep = (_SEQ_COL,) if apply_path is not None else ()
-    values = (
-        edge_values(records, spec, keep=keep)
-        if isinstance(spec, EdgeSpec)
-        else node_values(records, spec, keep=keep)
-    )
+    values = values_of(records, spec, keep=keep)
     if apply_path is not None:
         values = values.persist()  # shared: statement assembly + apply
     stmts = assemble_statements(values.drop(_SEQ_COL), spec, batch=batch)
     out = None
     if output_path is not None:
         # the spec's position keeps two specs of one kind and name apart
-        out = f"{output_path}/src{spec_key}_{kind}_{spec.name}"
+        out = f"{output_path}/src{spec_key}_{spec.kind}_{spec.name}"
     # every fragment lands in exactly one statement: the statements'
     # n_records sum is the spec's record count
     counts = _write_counted(
@@ -333,13 +331,13 @@ def _run_spec(
     if apply_path is not None:
         try:
             applied_path, table_rows, n_failed = _apply_spec(
-                spark, values, spec, kind, apply_path
+                spark, values, spec, apply_path
             )
         finally:
             values.unpersist()
     return SpecResult(
         source=src.path or "sql",
-        kind=kind,
+        kind=spec.kind,
         name=spec.name,
         n_records=counts["records"] or 0,
         n_statements=counts["n"],
@@ -354,8 +352,7 @@ def _run_spec(
 def _apply_spec(
     spark: SparkSession,
     values: DataFrame,
-    spec: Union[NodeSpec, EdgeSpec],
-    kind: str,
+    spec: GraphSpec,
     apply_path: str,
 ) -> tuple:
     """Apply one spec's mutation batch to its persistent table — the store
@@ -370,32 +367,26 @@ def _apply_spec(
     """
     from pyspark.sql.types import StringType, StructField, StructType
 
-    from nebula_importer_spark.functions.filters import compile_filter
     from nebula_importer_spark.operators.checkpointing import materialize
     from nebula_importer_spark.operators.merge import apply_mutations
-    from nebula_importer_spark.plans.specs import Mode
 
-    if kind == "edge":
-        key_cols = ["src", "dst", "rank"]
-        if "rank" not in values.columns:  # reference default rank = 0
-            values = values.withColumn("rank", F.lit("0"))
-    else:
-        key_cols = ["vid"]
-
+    key = spec.table_key()
+    key_cols = list(key)
     prop_names = [f"p_{p.name}" for p in spec.props]
     batch_cols = []
     if spec.mode != Mode.DELETE:
         for p in spec.props:
             col = F.col(f"p_{p.name}")
-            if spec.mode in (Mode.UPDATE, Mode.UPSERT) and p.expr:
-                # the renderer's prop guard drops the clause from the SET
-                # list (mapping._set_clauses); here "dropped" = not set
-                clause = F.concat(F.lit(p.converted_name + " = "), col)
-                col = F.when(compile_filter(p.expr, variables={"val": clause}), col)
+            if spec.mode in (Mode.UPDATE, Mode.UPSERT):
+                # the renderer's guard drops the clause from the SET list;
+                # here "dropped" = not set
+                col = guard_clause(p, col)
             batch_cols.append(col.alias(f"p_{p.name}"))
-    batch = values.select(*key_cols, *batch_cols, F.col(_SEQ_COL))
+    batch = values.select(
+        *(c.alias(n) for n, c in key.items()), *batch_cols, F.col(_SEQ_COL)
+    )
 
-    table_path = f"{apply_path}/{kind}_{spec.name}"
+    table_path = f"{apply_path}/{spec.kind}_{spec.name}"
     if path_exists(spark, table_path):
         table = spark.read.parquet(table_path)
     else:  # first run: empty table with this spec's schema

@@ -9,7 +9,8 @@ resumability is a deterministic *bucket* of documents:
 * the pipeline writes its output partitioned by bucket with dynamic
   partition overwrite (re-running a bucket replaces, never duplicates);
 * after the data commit, one lineage row per bucket (doc range, doc/triple
-  counts, stage timing) is appended to the checkpoint table;
+  counts, stage timing), aggregated from the committed bucket files, is
+  appended to the checkpoint table;
 * on restart, buckets present in the checkpoint table are anti-joined away,
   so a mid-run kill re-processes only unfinished buckets and the overall
   result is byte-identical to an uninterrupted run.

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from nebula_importer_spark.operators.dedup import minhash_lsh_pairs
 from nebula_importer_spark.operators.mapping import edge_values, node_values
-from nebula_importer_spark.operators.triples import edge_triples, node_triples
+from nebula_importer_spark.operators.triples import spec_triples
 from nebula_importer_spark.pipeline.canonicalize import canonical_mapping
 from nebula_importer_spark.pipeline.corpus import explode_spans, reassemble
 from nebula_importer_spark.pipeline.extract import doc_mentions, extract_mentions
@@ -217,20 +217,16 @@ def run_pipeline(
     )
 
     # fixture replay through the reference-faithful mapping core
+    # (one body maps both kinds, called by each kind's public name)
     fixture_triples: list[DataFrame] = []
-    if fixture_node_specs or fixture_edge_specs:
-        records = fixture_records(spans, fixture_delimiter)
-        for nspec in fixture_node_specs:
-            vals = node_values(records, nspec, keep=["doc_id"])
+    records = fixture_records(spans, fixture_delimiter)
+    for values_of, specs in (
+        (node_values, fixture_node_specs), (edge_values, fixture_edge_specs)
+    ):
+        for spec in specs:
+            vals = values_of(records, spec, keep=["doc_id"])
             fixture_triples.append(
-                node_triples(vals, nspec, keep=("doc_id",)).withColumnRenamed(
-                    "doc_id", "src_doc"
-                )
-            )
-        for espec in fixture_edge_specs:
-            vals = edge_values(records, espec, keep=["doc_id"])
-            fixture_triples.append(
-                edge_triples(vals, espec, keep=("doc_id",)).withColumnRenamed(
+                spec_triples(vals, spec, keep=("doc_id",)).withColumnRenamed(
                     "doc_id", "src_doc"
                 )
             )
@@ -251,8 +247,18 @@ def run_pipeline(
         write_partitioned(bucketed, output_path)
         wall = time.time() - t0
         if checkpoint is not None:
+            # lineage rows from this wave's committed bucket files: every
+            # pending bucket with docs was just rewritten, and aggregating
+            # ``bucketed`` again would re-run the whole triple plan
+            wave = set(range(n_buckets)) - set(done)
+            if bucket_filter is not None:
+                wave &= set(bucket_filter)
+            committed = (
+                spark.read.schema(bucketed.schema).parquet(output_path)
+                .where(F.col("bucket").isin(sorted(wave)))
+            )
             lineage_rows = checkpoint.record(
-                bucketed, run_id=uuid.uuid4().hex, wall_sec=wall, doc_col="src_doc"
+                committed, run_id=uuid.uuid4().hex, wall_sec=wall, doc_col="src_doc"
             )
     else:
         # no write → no idempotent-partition contract to honor: one global

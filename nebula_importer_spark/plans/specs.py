@@ -2,11 +2,16 @@
 
 Dataclass mirrors of the reference's YAML config model
 (``/root/reference/pkg/spec/v3/node.go:15-33``, ``edge.go:14-44``,
-``nodeid.go:17-25``, ``prop.go:12-27``, ``rank.go:9-14``). ``complete()``
-performs the same constant folding the reference does at build time
-(statement prefixes, default types/modes — ``node.go:87-123``,
-``edge.go:105-154``) and ``validate()`` the same checks
-(``node.go:125-157``, ``edge.go:156-202``).
+``nodeid.go:17-25``, ``prop.go:12-27``, ``rank.go:9-14``). The reference
+builds tags and edges with two parallel builders; here the one difference
+between them, the key, lives behind :class:`GraphSpec`: a tag is keyed by
+its VID, an edge by ``src->dst[@rank]``. Each spec names its key columns
+and their pickers, its rendered key, its head triple and whether its
+DELETEs share one prefix, so the mapping, triple, statement and apply code
+has one body for both kinds. ``complete()`` performs the constant folding
+the reference does at build time (statement prefixes, default types/modes
+— ``node.go:87-123``, ``edge.go:105-154``) and ``validate()`` the same
+checks (``node.go:125-157``, ``edge.go:156-202``).
 
 Divergences from the *fork's* code, both deliberate and following the fork's
 own unit-test goldens (see SURVEY.md §2.3):
@@ -22,7 +27,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 from enum import Enum
-from typing import List, Optional, Sequence, Union
+from typing import ClassVar, Dict, List, Optional, Sequence, Tuple, Union
+
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 from nebula_importer_spark.functions.pickers import (
     NULL_RENDER,
@@ -134,16 +142,35 @@ class RankSpec:
 
     index: int = 0
 
+    def complete(self) -> None:
+        """Nothing to fold: the type is fixed."""
+
+    def validate(self) -> None:
+        """Nothing to check: any index is valid."""
+
     def picker_config(self) -> PickerConfig:
         return PickerConfig(indices=[self.index], type="INT")
 
 
 @dataclass
-class NodeSpec:
-    """Vertex tag mapping (``pkg/spec/v3/node.go:15-33``)."""
+class GraphSpec:
+    """What a tag and an edge mapping share: the fields, the prefix folding
+    (``node.go:87-123``, ``edge.go:105-154``) and the checks
+    (``node.go:125-157``, ``edge.go:156-202``). A subclass names its key:
+    the columns that pick it, its rendered form and its head triple."""
+
+    #: the word in the statement (``src<i>_<j>_<kind>_<name>``) and table
+    #: (``<kind>_<name>``) paths of an import
+    kind: ClassVar[str]
+    #: error-message noun, and the statement word after INSERT/UPDATE/UPSERT
+    noun: ClassVar[str]
+    word: ClassVar[str]
+    delete_prefix: ClassVar[str]  # formatted with the converted name
+    #: DELETE fragments joined under one prefix (``edge.go:321-372``), or
+    #: each a full statement (``node.go:263-266``)
+    delete_shares_prefix: ClassVar[bool]
 
     name: str
-    id: NodeIDSpec = field(default_factory=NodeIDSpec)
     props: List[PropSpec] = field(default_factory=list)
     ignore_existed_index: Optional[bool] = None  # None ⇒ True (test goldens)
     ignore_existed_record: Optional[bool] = None  # None ⇒ False
@@ -152,85 +179,106 @@ class NodeSpec:
 
     statement_prefix: str = field(default="", init=False)
 
+    def key_specs(self) -> Dict[str, Union[NodeIDSpec, RankSpec]]:
+        """Key column name → the spec that picks it, in output order."""
+        raise NotImplementedError
+
+    def key(self) -> Column:
+        """The rendered key: a fragment's target and every prop triple's
+        subject."""
+        raise NotImplementedError
+
+    def head_triple(self) -> Tuple[Column, Column, Column]:
+        """(subj, pred, obj) of the triple each row emits besides its props."""
+        raise NotImplementedError
+
+    def table_key(self) -> Dict[str, Column]:
+        """Key columns of the applied table (``pipeline.importer``)."""
+        return {c: F.col(c) for c in self.key_specs()}
+
     def complete(self) -> None:
-        """Prefix constant folding, mirroring ``node.go:87-123``."""
-        self.id.complete()
-        for p in self.props:
-            p.complete()
+        """Prefix constant folding."""
+        for part in (*self.key_specs().values(), *self.props):
+            part.complete()
         self.mode = Mode.convert(self.mode)
         name = convert_identifier(self.name)
         if self.mode == Mode.INSERT:
-            prefix = "INSERT VERTEX"
+            prefix = f"INSERT {self.word}"
             if self.ignore_existed_index is None or self.ignore_existed_index:
                 prefix += " IGNORE_EXISTED_INDEX"
             if self.ignore_existed_record:
                 prefix += " IF NOT EXISTS"
             names = ", ".join(p.converted_name for p in self.props)
             self.statement_prefix = f"{prefix} {name}({names}) VALUES "
-        elif self.mode == Mode.UPSERT:
-            self.statement_prefix = f"UPSERT VERTEX ON {name} "
-        elif self.mode == Mode.UPDATE:
-            self.statement_prefix = f"UPDATE VERTEX ON {name} "
+        elif self.mode in (Mode.UPSERT, Mode.UPDATE):
+            self.statement_prefix = f"{self.mode.value} {self.word} ON {name} "
         elif self.mode == Mode.DELETE:
-            self.statement_prefix = f"DELETE TAG {name} FROM "
+            self.statement_prefix = self.delete_prefix.format(name)
 
     def validate(self) -> None:
-        """Mirror of ``node.go:125-157``."""
+        """The reference's build-time checks."""
         if not self.name:
-            raise SpecValidationError("node without name")
-        self.id.validate()
-        for p in self.props:
-            p.validate()
+            raise SpecValidationError(f"{self.noun} without name")
+        for part in (*self.key_specs().values(), *self.props):
+            part.validate()
         if self.mode in (Mode.UPDATE, Mode.UPSERT) and not self.props:
-            raise SpecValidationError(f"{self.mode} node requires props")
+            raise SpecValidationError(f"{self.mode} {self.noun} requires props")
 
 
 @dataclass
-class EdgeSpec:
-    """Edge mapping (``pkg/spec/v3/edge.go:14-44``)."""
+class NodeSpec(GraphSpec):
+    """Vertex tag mapping (``pkg/spec/v3/node.go:15-33``); the key is the
+    VID."""
 
-    name: str
+    kind: ClassVar[str] = "tag"
+    noun: ClassVar[str] = "node"
+    word: ClassVar[str] = "VERTEX"
+    delete_prefix: ClassVar[str] = "DELETE TAG {} FROM "
+    delete_shares_prefix: ClassVar[bool] = False
+
+    id: NodeIDSpec = field(default_factory=NodeIDSpec)
+
+    def key_specs(self) -> Dict[str, Union[NodeIDSpec, RankSpec]]:
+        return {"vid": self.id}
+
+    def key(self) -> Column:
+        return F.col("vid")
+
+    def head_triple(self) -> Tuple[Column, Column, Column]:
+        return F.col("vid"), F.lit(f"tag:{self.name}"), F.lit("NULL")
+
+
+@dataclass
+class EdgeSpec(GraphSpec):
+    """Edge mapping (``pkg/spec/v3/edge.go:14-44``); the key is
+    ``src->dst[@rank]``."""
+
+    kind: ClassVar[str] = "edge"
+    noun: ClassVar[str] = "edge"
+    word: ClassVar[str] = "EDGE"
+    delete_prefix: ClassVar[str] = "DELETE EDGE {} "
+    delete_shares_prefix: ClassVar[bool] = True
+
     src: NodeIDSpec = field(default_factory=NodeIDSpec)
     dst: NodeIDSpec = field(default_factory=NodeIDSpec)
     rank: Optional[RankSpec] = None
-    props: List[PropSpec] = field(default_factory=list)
-    ignore_existed_index: Optional[bool] = None
-    ignore_existed_record: Optional[bool] = None
-    filter: Optional[str] = None
-    mode: Union[str, Mode] = Mode.INSERT
 
-    statement_prefix: str = field(default="", init=False)
+    def key_specs(self) -> Dict[str, Union[NodeIDSpec, RankSpec]]:
+        keys: Dict[str, Union[NodeIDSpec, RankSpec]] = {"src": self.src, "dst": self.dst}
+        if self.rank is not None:
+            keys["rank"] = self.rank
+        return keys
 
-    def complete(self) -> None:
-        """Prefix constant folding, mirroring ``edge.go:105-154``."""
-        self.src.complete()
-        self.dst.complete()
-        for p in self.props:
-            p.complete()
-        self.mode = Mode.convert(self.mode)
-        name = convert_identifier(self.name)
-        if self.mode == Mode.INSERT:
-            prefix = "INSERT EDGE"
-            if self.ignore_existed_index is None or self.ignore_existed_index:
-                prefix += " IGNORE_EXISTED_INDEX"
-            if self.ignore_existed_record:
-                prefix += " IF NOT EXISTS"
-            names = ", ".join(p.converted_name for p in self.props)
-            self.statement_prefix = f"{prefix} {name}({names}) VALUES "
-        elif self.mode == Mode.UPSERT:
-            self.statement_prefix = f"UPSERT EDGE ON {name} "
-        elif self.mode == Mode.UPDATE:
-            self.statement_prefix = f"UPDATE EDGE ON {name} "
-        elif self.mode == Mode.DELETE:
-            self.statement_prefix = f"DELETE EDGE {name} "
+    def _rank_suffix(self) -> Column:
+        return F.concat(F.lit("@"), F.col("rank")) if self.rank is not None else F.lit("")
 
-    def validate(self) -> None:
-        """Mirror of ``edge.go:156-202``."""
-        if not self.name:
-            raise SpecValidationError("edge without name")
-        self.src.validate()
-        self.dst.validate()
-        for p in self.props:
-            p.validate()
-        if self.mode in (Mode.UPDATE, Mode.UPSERT) and not self.props:
-            raise SpecValidationError(f"{self.mode} edge requires props")
+    def key(self) -> Column:
+        return F.concat(F.col("src"), F.lit("->"), F.col("dst"), self._rank_suffix())
+
+    def head_triple(self) -> Tuple[Column, Column, Column]:
+        return F.col("src"), F.concat(F.lit(self.name), self._rank_suffix()), F.col("dst")
+
+    def table_key(self) -> Dict[str, Column]:
+        keys = super().table_key()
+        keys.setdefault("rank", F.lit("0"))  # the reference's default rank
+        return keys

@@ -13,16 +13,16 @@ event-time windows + watermarks.
 
 from __future__ import annotations
 
-from typing import Optional, Union
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from nebula_importer_spark.operators.mapping import node_values, edge_values
-from nebula_importer_spark.operators.triples import edge_triples, node_triples
-from nebula_importer_spark.plans.specs import EdgeSpec, NodeSpec
+from nebula_importer_spark.operators.mapping import spec_values
+from nebula_importer_spark.operators.triples import spec_triples
+from nebula_importer_spark.plans.specs import GraphSpec
 from nebula_importer_spark.sources.csv import _reader, records_from_columns
 
 
@@ -53,16 +53,12 @@ def stream_records_csv(
     return records_from_columns(reader.csv(path))
 
 
-def stream_triples(
-    records: DataFrame, spec: Union[NodeSpec, EdgeSpec]
-) -> DataFrame:
+def stream_triples(records: DataFrame, spec: GraphSpec) -> DataFrame:
     """Apply a mapping spec to a streaming record DataFrame → triples.
 
     Stateless projection — no watermark needed, full streaming support.
     """
-    if isinstance(spec, EdgeSpec):
-        return edge_triples(edge_values(records, spec), spec)
-    return node_triples(node_values(records, spec), spec)
+    return spec_triples(spec_values(records, spec), spec)
 
 
 def start_parquet_sink(

@@ -121,6 +121,35 @@ def test_apply_incremental_runs(spark, tmp_path):
     assert got["1"] == ('"al"', "31") and got["2"] == ('"bo"', "43")
 
 
+GUARDED_SPEC = """
+    - name: person
+      mode: UPSERT
+      id:
+        type: "INT"
+        index: 0
+      props:
+        - name: "name"
+          type: "STRING"
+          index: 1
+        - name: "age"
+          type: "int"
+          index: 2
+          nullable: true
+          expr: 'val != "`age` = NULL"'
+"""
+
+
+def test_apply_upsert_prop_guard(spark, tmp_path):
+    """A prop guard that drops its SET clause keeps the stored value; one
+    that passes sets it, exactly as the rendered statement reads."""
+    _run(spark, tmp_path, "p.csv", ["1,a,10", "2,b,20"], PERSON_SPEC.format(mode="INSERT"))
+    r = _run(spark, tmp_path, "q.csv", ["1,aa,", "2,bb,21"], GUARDED_SPEC)
+    (batch,) = [x.statement for x in r.specs[0].statements.collect()]
+    assert 'UPSERT VERTEX ON `person` 1 SET `name` = "aa";' in batch
+    assert 'UPSERT VERTEX ON `person` 2 SET `name` = "bb", `age` = 21;' in batch
+    assert _table(spark, tmp_path) == {"1": ('"aa"', "10"), "2": ('"bb"', "21")}
+
+
 def test_apply_insert_idempotent(spark, tmp_path):
     rows = ["1,a,10", "2,b,20"]
     spec = PERSON_SPEC.format(mode="INSERT")

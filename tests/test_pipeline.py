@@ -9,7 +9,12 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from nebula_importer_spark.fixtures import PERSON_CSV_LINES, person_spec
+from nebula_importer_spark.fixtures import (
+    KNOWS_CSV_LINES,
+    PERSON_CSV_LINES,
+    knows_rank_spec,
+    person_spec,
+)
 from nebula_importer_spark.pipeline.canonicalize import (
     _driver_labels,
     canonical_mapping,
@@ -192,6 +197,42 @@ def test_lineage_resume_idempotent(spark, tmp_path):
     assert again.exceptAll(clean).count() == 0
 
 
+def test_lineage_rows_come_from_committed_files(spark, tmp_path):
+    """Recording a wave reads its committed bucket files: the checkpoint
+    adds the lineage probe and the lineage write, not a second run of the
+    triple plan, and its rows count what the wave wrote."""
+    # a corpus no other test runs: an equal plan cached by an earlier
+    # pipeline would serve one of the two runs and skew the comparison
+    corpus = synthetic_corpus(spark, 60, seed=13, partitions=4)
+    sc = spark.sparkContext
+
+    def jobs(name, **kwargs):
+        group = f"test-lineage-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            run_pipeline(
+                spark, corpus, output_path=str(tmp_path / name), n_buckets=8, **kwargs
+            ).unpersist()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    plain = jobs("plain")
+    ckpt = Checkpoint(str(tmp_path / "ckpt"))
+    recorded = jobs("recorded", checkpoint=ckpt)
+    assert recorded - plain <= 3
+    out = spark.read.parquet(str(tmp_path / "recorded"))
+    want = {
+        (r.bucket, r.n_docs, r.n_triples)
+        for r in out.groupBy("bucket")
+        .agg(F.countDistinct("src_doc").alias("n_docs"), F.count("*").alias("n_triples"))
+        .collect()
+    }
+    got = spark.read.parquet(ckpt.lineage_path).collect()
+    assert {(r.bucket, r.n_docs, r.n_triples) for r in got} == want
+    assert sum(r.n_docs for r in got) == 60
+
+
 def test_completed_buckets_missing_table_is_empty_corrupt_raises(spark, tmp_path):
     """No lineage table means a first run; an unreadable one is an error,
     not "nothing done" (which would reprocess every bucket)."""
@@ -236,6 +277,38 @@ def test_run_pipeline_end_to_end_with_fixture_replay(spark):
     assert rows[('"933"', "Person.birthday")] == 'DATE("1989-12-03")'
     stats = {r.pred: r.n_triples for r in result.stats.collect()}
     assert stats["tag:Document"] == 40
+
+
+def test_run_pipeline_replays_ranked_edge_fixture(spark):
+    """An edge spec replays through the document pathway like a tag spec:
+    the KNOWS rows embedded as table_row spans give the reference's ranked
+    edge triples (test_fixture_parity's goldens)."""
+    corpus = synthetic_corpus(
+        spark, 40, seed=42, fixture_rows=list(KNOWS_CSV_LINES), partitions=4
+    )
+    result = run_pipeline(
+        spark, corpus, fixture_edge_specs=[knows_rank_spec()], fixture_delimiter=","
+    )
+    embedded = {
+        s.text
+        for r in corpus.select("spans").collect()
+        for s in r.spans
+        if s.media_ref.startswith("fixture://")
+    }
+    assert embedded == set(KNOWS_CSV_LINES)
+    want = set()
+    for line in KNOWS_CSV_LINES:
+        src, dst, created = line.split(",")
+        s, d = f'"person_{src}_id"', f'"person_{dst}_id"'
+        want.add((s, f"KNOWS@{src}", d))
+        want.add((f"{s}->{d}@{src}", "KNOWS.creationDate", f'DATETIME("{created}")'))
+    got = {
+        (r.subj, r.pred, r.obj)
+        for r in result.triples.where(F.col("pred").startswith("KNOWS")).collect()
+    }
+    result.unpersist()
+    assert ('"person_933_id"', "KNOWS@933", '"person_2199023256684_id"') in got
+    assert got == want
 
 
 def test_star_cc_matches_min_label_on_random_graphs(spark, monkeypatch):

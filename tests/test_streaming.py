@@ -3,7 +3,12 @@ exactly-once file sink, and windowed aggregation with watermark."""
 
 from __future__ import annotations
 
-from nebula_importer_spark.fixtures import PERSON_CSV_LINES, person_spec
+from nebula_importer_spark.fixtures import (
+    KNOWS_CSV_LINES,
+    PERSON_CSV_LINES,
+    knows_rank_spec,
+    person_spec,
+)
 from nebula_importer_spark.streaming.ingest import (
     start_parquet_sink,
     stream_records_csv,
@@ -48,6 +53,30 @@ def test_stream_csv_to_triples_parquet(spark, tmp_path):
     q3.awaitTermination(120)
     assert spark.read.parquet(out).count() == (len(PERSON_CSV_LINES) + 1) * 8
 
+
+def test_stream_edge_triples_match_batch(spark, tmp_path):
+    """An edge spec streams through the same mapping as a batch read: the
+    ranked KNOWS triples of the streamed files equal the batch ones."""
+    from nebula_importer_spark.operators.mapping import edge_values
+    from nebula_importer_spark.operators.triples import edge_triples
+    from nebula_importer_spark.sources.csv import read_records_csv
+
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "a.csv").write_text("\n".join(KNOWS_CSV_LINES[:4]) + "\n")
+    (src / "b.csv").write_text("\n".join(KNOWS_CSV_LINES[4:]) + "\n")
+
+    records = stream_records_csv(spark, str(src), n_columns=3)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    q = start_parquet_sink(stream_triples(records, knows_rank_spec()), out, ckpt)
+    q.awaitTermination(120)
+
+    spec = knows_rank_spec()
+    batch = edge_triples(edge_values(read_records_csv(spark, str(src))[0], spec), spec)
+    got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
+    assert len(got) == len(KNOWS_CSV_LINES) * 2
+    assert ('"person_933_id"', "KNOWS@933", '"person_2199023256684_id"') in got
+    assert got == sorted(tuple(r) for r in batch.collect())
 
 
 def test_stream_and_batch_parse_a_file_alike(spark, tmp_path):

@@ -17,8 +17,11 @@ COMMENTARY = {
     "map_vertex_insert": (
         "Mapping core is a narrow projection: one `Scan parquet` with "
         "ReadSchema pruned to exactly the 5 consumed columns, two Projects "
-        "rendering every literal JVM-side, one Generate (explode) for the "
-        "per-prop triples. The lower Project picks each value; the upper "
+        "rendering every literal JVM-side, one Generate (explode) over "
+        "(subj, pred, obj) structs: the head triple `tag:Customer` and one "
+        "triple per prop, each naming its subject (the same body emits edge "
+        "triples, whose head subject differs from the prop triples' key). "
+        "The lower Project picks each value; the upper "
         "one quotes them (the inlined SQL function `nis_go_quote`). The "
         "quote's escape branch is a `transform` lambda, which has no "
         "generated code, so that Project runs outside whole-stage codegen; "
