@@ -40,9 +40,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nebula_importer_spark.operators.dedup import (
+    LSH_BANDS,
+    MINHASH_K,
     exact_duplicates,
+    fingerprints,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
+    normalized_text,
     simhash_fingerprints,
 )
 from nebula_importer_spark.operators.mapping import edge_values, node_values
@@ -53,7 +57,6 @@ from nebula_importer_spark.operators.similarity import (
 )
 from nebula_importer_spark.operators.statements import assemble_statements
 from nebula_importer_spark.operators.textstats import (
-    fingerprints,
     lang_id,
     quality_scores,
     token_counts,
@@ -479,7 +482,7 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return embedding_lsh_pairs(
         _t(spark, sf_dir, "embeddings"),
-        threshold=0.40, planes=8, bands=2, multiprobe=True, dim=EMB_DIM,
+        threshold=0.40, planes=8, bands=2, dim=EMB_DIM,
     )
 
 
@@ -570,15 +573,9 @@ def q_kg_canonicalize_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kg_canonicalize_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CC over MinHash-LSH pairs — the pipeline's actual scale path
     (run.py feeds canonical_mapping from minhash_lsh_pairs, never the
-    all-pairs exact join), oracle-checked end-to-end.
-
-    carry_sets=True: at threshold 0.3 a large share of docs survives
-    banding — the dup-heavy regime, where the sets ride the signature
-    shuffle instead of being rebuilt candidate-side. Measured best-of-3 at
-    sf0.1 under the former min-label CC: 4.68 s → 3.06 s together with a
-    single pair-list computation, which the driver-side CC also keeps."""
+    all-pairs exact join), oracle-checked end-to-end."""
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, threshold=0.3, carry_sets=True)
+    pairs = minhash_lsh_pairs(docs, threshold=0.3)
     return canonical_mapping(docs, pairs)
 
 
@@ -595,8 +592,7 @@ def q_spans_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     doc_id = F.col("doc_id").cast("string").alias("doc_id")
     rebuilt = reassemble(interleave_documents(docs.select(doc_id, "text")))
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    orig = docs.select(doc_id, norm.alias("norm"))
+    orig = docs.select(doc_id, normalized_text(F.col("text")).alias("norm"))
     return rebuilt.join(orig, "doc_id").select(
         F.col("doc_id").cast(docs.schema["doc_id"].dataType).alias("doc_id"),
         (F.col("text") == F.col("norm")).alias("ok"),
@@ -930,11 +926,14 @@ _JACCARD_PAIRS = """
 """
 
 _MH = ",\n".join(
-    f"         MIN(md5('{i}:' || s)) AS mh{i}" for i in range(12)
+    f"         MIN(md5('{i}:' || s)) AS mh{i}" for i in range(MINHASH_K)
 )
+_ROWS = MINHASH_K // LSH_BANDS
 _BANDS = "\n  UNION ALL ".join(
-    f"SELECT doc_id, {b} AS band, md5(mh{3*b} || '|' || mh{3*b+1} || '|' || mh{3*b+2}) AS digest FROM sig"
-    for b in range(4)
+    "SELECT doc_id, {b} AS band, md5({cols}) AS digest FROM sig".format(
+        b=b, cols=" || '|' || ".join(f"mh{b * _ROWS + r}" for r in range(_ROWS))
+    )
+    for b in range(LSH_BANDS)
 )
 
 # MinHash banding + verified LSH pairs (mirrors dedup.minhash_lsh_pairs with

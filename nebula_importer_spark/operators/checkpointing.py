@@ -21,9 +21,9 @@ cluster-run knob), it uses the reliable form; otherwise it falls back to
 ``localCheckpoint``. Every lineage cut whose result outlives one query
 routes through here, so one driver-side line flips the whole engine to
 fault-tolerant checkpoints for cluster runs. A cut used only inside one
-query (multiprobe LSH in ``operators/similarity.py``, the signature and
-candidate cuts of ``operators/dedup.minhash_lsh_pairs``) stays a
-``localCheckpoint``: a reliable one would leave its files behind per call.
+query (multiprobe LSH in ``operators/similarity.py``, the signature cut of
+``operators/dedup.minhash_lsh_pairs``) stays a ``localCheckpoint``: a
+reliable one would leave its files behind per call.
 """
 
 from __future__ import annotations
@@ -31,10 +31,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Cut lineage and (by default) compute now; reliable iff a checkpoint
-    dir is configured on the session, executor-local otherwise."""
+def materialize(df: DataFrame) -> DataFrame:
+    """Cut lineage and compute now; reliable iff a checkpoint dir is
+    configured on the session, executor-local otherwise."""
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is not None:
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)

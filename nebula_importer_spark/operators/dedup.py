@@ -1,4 +1,5 @@
-"""Deduplication operators: exact, n-gram Jaccard, MinHash-LSH, SimHash.
+"""Deduplication operators: fingerprint/exact, n-gram Jaccard, MinHash-LSH,
+SimHash.
 
 The reference importer delegates dedup to the server (``IGNORE_EXISTED_INDEX``
 / ``IF NOT EXISTS`` statement prefixes, ``/root/reference/pkg/spec/v3/
@@ -8,11 +9,12 @@ functions so Catalyst/Tungsten own the row path.
 
 Scale notes (100 TB):
 
-* exact dedup — one hash-shuffle on a 32-byte key; combine-side partial
-  aggregation makes it map-dominant.
+* exact dedup — one hash-shuffle on a 32-byte key (the md5 fingerprint);
+  combine-side partial aggregation makes it map-dominant.
 * n-gram Jaccard — the exact O(pairs-sharing-a-shingle) path; use only below
   ~10M docs per blocking key. The scale path is MinHash-LSH below.
-* MinHash-LSH — shuffle cost is O(docs × bands); band buckets bound the
+* MinHash-LSH — one shuffle builds each doc's signature and carries its
+  shingle set; banding costs O(docs × bands) and band buckets bound the
   candidate join. Signatures use min-over-md5 which is deterministic across
   engines and re-runs (no seeded RNG state to lose on resume).
 * SimHash — one shuffle (explode tokens → 16 partial bit-sums); fingerprint
@@ -34,20 +36,38 @@ HEX = "0123456789abcdef"
 #: flagged the former ``None`` default as the engine's last unsafe default.
 DEFAULT_MAX_DF = 10_000
 
+#: MinHash-LSH shape: MINHASH_K hashes over word SHINGLE_N-grams, cut into
+#: LSH_BANDS bands of MINHASH_K / LSH_BANDS rows. The contract's DuckDB
+#: oracle builds its signature and band SQL from the same constants.
+MINHASH_K = 12
+LSH_BANDS = 4
+SHINGLE_N = 3
+
 
 def normalized_text(text: Column) -> Column:
     return F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
 
 
+def fingerprints(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """Document fingerprint: md5 over whitespace-normalized lowercase text.
+
+    The classic exact-dedup key (normalization collapses runs of whitespace).
+    md5 is engine-portable (identical in Spark / DuckDB / Python) which keeps
+    fingerprints stable across the oracle boundary and across re-runs.
+    """
+    norm = normalized_text(F.col(text_col))
+    return df.select(F.col(id_col), F.md5(norm).alias("fingerprint"))
+
+
 def exact_duplicates(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """(doc_id, canonical_id): canonical = min id among docs with equal md5.
+    """(doc_id, canonical_id): canonical = min id among docs with equal
+    :func:`fingerprints`.
 
     One shuffle on the fingerprint; min() aggregates map-side first.
     """
-    fp = F.md5(normalized_text(F.col(text_col))).alias("fingerprint")
-    with_fp = df.select(F.col(id_col), fp)
+    with_fp = fingerprints(df, text_col, id_col)
     canon = with_fp.groupBy("fingerprint").agg(F.min(id_col).alias("canonical_id"))
     return (
         with_fp.join(canon, "fingerprint")
@@ -180,51 +200,34 @@ def band_digest(cols: list, portable: bool = True) -> Column:
     return F.xxhash64(*cols)
 
 
-def minhash_signatures(
-    df: DataFrame,
-    k: int = 12,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    portable: bool = True,
-    carry_sets: bool = False,
-) -> DataFrame:
-    """k-permutation MinHash signature per doc: mh_i = min(h_i(shingle)).
+def minhash_signatures(df: DataFrame, portable: bool = True) -> DataFrame:
+    """MINHASH_K-permutation MinHash signature per doc, mh_i = min(h_i(shingle)),
+    plus the doc's shingle set as ``shset``.
 
-    ``h_i`` is :func:`minhash_value`. One shuffle: groupBy(doc) with k
-    partial mins; the k hashes run in the codegen'd projection over
-    exploded shingle rows (higher-order functions over a per-row array
-    would run interpreted and re-evaluate the shingle build per hash —
-    measured ~6× slower). ``carry_sets`` adds each doc's shingle set as
-    ``shset``, riding the same shuffle.
+    ``h_i`` is :func:`minhash_value`. One shuffle: groupBy(doc) with the
+    partial mins and the ``collect_set``; the hashes run in the codegen'd
+    projection over exploded shingle rows (higher-order functions over a
+    per-row array would run interpreted and re-evaluate the shingle build per
+    hash — measured ~6× slower).
     """
-    sh = word_shingles(df, n=n, text_col=text_col, id_col=id_col)
+    sh = word_shingles(df, n=SHINGLE_N)
     aggs = [
         F.min(minhash_value(i, F.col("shingle"), portable)).alias(f"mh{i}")
-        for i in range(k)
+        for i in range(MINHASH_K)
     ]
-    if carry_sets:
-        aggs.append(F.collect_set("shingle").alias("shset"))
-    return sh.groupBy(id_col).agg(*aggs)
+    return sh.groupBy("doc_id").agg(*aggs, F.collect_set("shingle").alias("shset"))
 
 
 def minhash_lsh_pairs(
-    df: DataFrame,
-    threshold: float = 0.3,
-    k: int = 12,
-    bands: int = 4,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    portable: bool = True,
-    carry_sets: bool = False,
+    df: DataFrame, threshold: float = 0.3, portable: bool = True
 ) -> DataFrame:
-    """Near-dup pairs via MinHash banding + exact Jaccard verification.
+    """Near-dup pairs of a (doc_id, text) table via MinHash banding + exact
+    Jaccard verification.
 
-    k hashes split into ``bands`` bands of k/bands rows; docs agreeing on any
-    whole band become candidates (join on the band digest — bounded buckets,
-    no O(n²)); candidates are then verified with exact shingle Jaccard so the
-    output has no false positives (recall is the LSH knob).
+    MINHASH_K hashes split into LSH_BANDS bands; docs agreeing on any whole
+    band become candidates (join on the band digest — bounded buckets, no
+    O(n²)); candidates are then verified with exact shingle Jaccard so the
+    output has no false positives (recall < 1 is the only approximation).
 
     ``portable=True`` hashes with md5 (byte-identical across engines — the
     oracle-checked mode). ``portable=False`` hashes with xxhash64 — JVM
@@ -233,46 +236,25 @@ def minhash_lsh_pairs(
 
     Shuffle budget (the 100-TB accounting): shingle dedup happens per-row
     (``array_distinct`` inside :func:`shingle_array`) BEFORE the explode, so
-    the exploded relation shuffles ONCE into the per-doc signature aggregation
-    (round 1 paid an extra full shuffle for distinct). Hashing stays in the
-    codegen'd projection over exploded rows — higher-order functions over the
-    per-row array would run interpreted and re-evaluate the shingle build per
-    hash, measured ~6× slower end-to-end. The explicit ``repartition(band,
-    digest)`` lets ReuseExchange serve BOTH self-join sides from one signature
-    pass.
-
-    ``carry_sets`` picks the verification regime — which one wins depends on
-    how much of the corpus survives banding:
-
-    * ``False`` (default — SPARSE duplicates, the common corpus-dedup case):
-      the signature relation stays NARROW (k hash columns), the candidate
-      pair list is materialized (it is the small relation by design), and
-      shingle sets are recomputed only for docs that appear in a candidate
-      pair. Cost ∝ candidates; a corpus with few near-dups never pays for
-      sets it won't compare (measured 8.4 → 3.5 s on the sf0.1 documents
-      table vs the carry design).
-    * ``True`` (DUP-HEAVY blocks, e.g. a crawl partition where most docs
-      have a near-dup): every doc's shingle set rides the one signature
-      shuffle as a ``collect_set`` and the signature relation is
-      materialized once; verification joins against it by id. When
-      candidate docs ≈ corpus the rejoin regime would rebuild nearly every
-      set a second time — measured 2× canonicalize wall on the pipeline's
-      synthetic corpus.
+    the exploded relation shuffles ONCE into the per-doc signature
+    aggregation, and each doc's shingle set rides that same shuffle as a
+    ``collect_set``. The signature relation is cut once; verification is two
+    id joins against it. The explicit ``repartition(band, digest)`` lets
+    ReuseExchange serve BOTH self-join sides from one signature pass.
+    Measured against rebuilding the sets candidate-side, local[4]: 2.63 vs
+    5.25 s (8 vs 16 jobs) on the sf0.1 documents table, 7.16 vs 17.4 s on a
+    20,000-doc corpus with sparse duplicates.
     """
-    rows = k // bands
+    rows = MINHASH_K // LSH_BANDS
     # one shuffle: the per-doc signature (map-side partial agg)
-    sig = minhash_signatures(
-        df, k=k, n=n, text_col=text_col, id_col=id_col,
-        portable=portable, carry_sets=carry_sets,
-    )
-    if carry_sets:
-        # materialize once: sig feeds banding AND both verify sides; lazy,
-        # the three consumer stages run concurrently inside one job and
-        # each would recompute the full shingle+hash pass (persist alone
-        # cannot dedupe concurrent in-job branches). Both cuts here live
-        # inside this query, so they stay executor-local: a reliable
-        # checkpoint would leave its files behind per call
-        sig = sig.localCheckpoint(eager=True)
+    sig = minhash_signatures(df, portable)
+    # materialize once: sig feeds banding AND both verify sides; lazy, the
+    # three consumer stages run concurrently inside one job and each would
+    # recompute the full shingle+hash pass (persist alone cannot dedupe
+    # concurrent in-job branches). The cut lives inside this query, so it
+    # stays executor-local: a reliable checkpoint would leave its files
+    # behind per call
+    sig = sig.localCheckpoint(eager=True)
     band_structs = [
         F.struct(
             F.lit(b).alias("band"),
@@ -280,11 +262,11 @@ def minhash_lsh_pairs(
                 [F.col(f"mh{b * rows + r}") for r in range(rows)], portable
             ).alias("digest"),
         )
-        for b in range(bands)
+        for b in range(LSH_BANDS)
     ]
     banded = (
-        sig.select(F.col(id_col), F.explode(F.array(*band_structs)).alias("bk"))
-        .select(id_col, F.col("bk.band").alias("band"), F.col("bk.digest").alias("digest"))
+        sig.select("doc_id", F.explode(F.array(*band_structs)).alias("bk"))
+        .select("doc_id", F.col("bk.band").alias("band"), F.col("bk.digest").alias("digest"))
         # explicit exchange on the join key: both self-join sides reuse ONE
         # signature computation (ReuseExchange) and it already satisfies the
         # join's hash distribution
@@ -293,54 +275,19 @@ def minhash_lsh_pairs(
 
     # candidate generation is bucket-local on a narrow (id, band, digest)
     # relation — never the all-pairs exact join the plain n-gram operator does
-    a = banded.select(F.col(id_col).alias("id_a"), "band", "digest")
-    b = banded.select(F.col(id_col).alias("id_b"), "band", "digest")
+    a = banded.select(F.col("doc_id").alias("id_a"), "band", "digest")
+    b = banded.select(F.col("doc_id").alias("id_b"), "band", "digest")
     cand = (
         a.join(b, ["band", "digest"])
         .where(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .dropDuplicates()
     )
-    if carry_sets:
-        # dup-heavy regime: every doc's set already rode the signature
-        # shuffle; verification is two id joins against the materialized sig
-        enriched = cand.join(
-            sig.select(F.col(id_col).alias("id_a"), F.col("shset").alias("sa")), "id_a"
-        ).join(
-            sig.select(F.col(id_col).alias("id_b"), F.col("shset").alias("sb")), "id_b"
-        )
-    else:
-        # sparse regime: materialize the candidate list (it is the SMALL
-        # relation by design, and is consumed twice below — pair join + the
-        # id semi-join; lazy, the whole signature+band subtree would
-        # re-execute per consumer), restrict the corpus to candidate docs,
-        # shingle exactly once per surviving doc, and join plain array
-        # columns. The arrays must sit BELOW an exchange when the pair join
-        # sees them — without that barrier Catalyst pushes the Jaccard
-        # threshold into the join condition and substitutes the whole
-        # regexp+split+transform chain into it, rebuilding both shingle
-        # arrays several times per probed row (observed: 2× pipeline wall
-        # at 50k docs). No broadcast HINT on purpose: AQE broadcasts the
-        # candidate side when its runtime size is small but falls back to a
-        # shuffle join on a dup-heavy corpus where forcing the broadcast
-        # would OOM the driver.
-        cand = cand.localCheckpoint(eager=True)
-        cand_ids = (
-            cand.select(F.col("id_a").alias(id_col))
-            .union(cand.select(F.col("id_b").alias(id_col)))
-            .dropDuplicates()
-        )
-        shingled = (
-            df.select(F.col(id_col), F.col(text_col))
-            .join(cand_ids, id_col)
-            .select(F.col(id_col), shingle_array(F.col(text_col), n).alias("sh"))
-            .repartition(F.col(id_col))
-        )
-        enriched = cand.join(
-            shingled.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sa")), "id_a"
-        ).join(
-            shingled.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sb")), "id_b"
-        )
+    enriched = cand.join(
+        sig.select(F.col("doc_id").alias("id_a"), F.col("shset").alias("sa")), "id_a"
+    ).join(
+        sig.select(F.col("doc_id").alias("id_b"), F.col("shset").alias("sb")), "id_b"
+    )
     inter = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
     union = F.size(F.col("sa")) + F.size(F.col("sb")) - inter
     j = inter / union

@@ -1,7 +1,7 @@
 """Text-analysis operators for large-scale training-data pipelines.
 
 Language-ID (marker-token heuristic), quality scoring, token counting
-(whitespace + regex tokenizer), and document fingerprinting. All of these
+(whitespace + regex tokenizer), and top-k n-grams. All of these
 are pure built-in-function column programs — JVM-side, whole-stage-codegen,
 zero Python in the row path — so they pipeline with the parquet scan and
 scale linearly with input splits (no shuffle at all except where noted).
@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from nebula_importer_spark.operators.dedup import normalized_text
 
 # Deterministic marker lexicons for the language-ID heuristic. Real systems
 # use char n-gram profiles; the *shape* (per-language token scoring + argmax)
@@ -135,9 +137,7 @@ def topk_ngrams(
     TakeOrderedAndProject: each partition keeps its local k, the driver
     merges k × partitions tiny rows — no global sort.
     """
-    toks = F.split(
-        F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " "
-    )
+    toks = F.split(normalized_text(F.col(text_col)), " ")
     count = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0))
     grams = F.transform(
         F.sequence(F.lit(1), count),
@@ -152,14 +152,3 @@ def topk_ngrams(
         .orderBy(F.col("n").desc(), F.col("ngram").asc())
         .limit(k)
     )
-
-
-def fingerprints(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Document fingerprint: md5 over whitespace-normalized lowercase text.
-
-    The classic exact-dedup key (normalization collapses runs of whitespace).
-    md5 is engine-portable (identical in Spark / DuckDB / Python) which keeps
-    fingerprints stable across the oracle boundary and across re-runs.
-    """
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    return df.select(F.col(id_col), F.md5(norm).alias("fingerprint"))

@@ -155,19 +155,13 @@ def run_pipeline(
     corpus = with_bucket(corpus, n_buckets).persist()
 
     # global stage: near-dup pairs + connected components over ALL docs.
-    # flat is persisted because minhash_lsh_pairs consumes its input three
-    # times (signature chain + both candidate text lookups): on a raw
-    # parquet table the re-scans are free, but reassemble() is a computed
-    # subtree (span sort + array_join per doc) and re-executing it per
-    # consumer tripled the canonicalize stage at 50k docs.
+    # minhash_lsh_pairs reads flat once (the signature pass, which it cuts),
+    # but flat stays persisted: dropping the cache was not faster on the
+    # 500-doc synthetic corpus (3 alternating pairs of 10 runs, local[4]:
+    # median 3.50 / 2.76 / 2.68 s without it, 3.24 / 2.36 / 2.80 s with it)
     flat = reassemble(corpus.select("doc_id", "spans")).persist()
-    pairs = minhash_lsh_pairs(
-        flat, threshold=dedup_threshold, text_col="text", id_col="doc_id",
-        portable=False,   # internal only → xxhash64 fast path
-        carry_sets=True,  # this corpus is dup-heavy by design: most docs
-                          # survive banding, so sets ride the signature
-                          # shuffle instead of being rebuilt candidate-side
-    )
+    # internal only → portable=False, the xxhash64 fast path
+    pairs = minhash_lsh_pairs(flat, threshold=dedup_threshold, portable=False)
     canon = canonical_mapping(corpus.select("doc_id"), pairs).persist()
     # canonical_mapping has already computed the pairs, and its component
     # labels are a driver-built or checkpointed relation, so the reassembled

@@ -54,9 +54,9 @@ def test_materialize_uses_reliable_checkpoint_when_dir_set(spark, checkpoint_dir
 
 
 def test_multiprobe_lsh_leaves_no_checkpoint_files(spark, checkpoint_dir):
-    """The multiprobe LSH cut and MinHash LSH's signature and candidate cuts
-    live inside one query: they stay executor-local under a checkpoint dir
-    instead of leaving reliable files per call."""
+    """The multiprobe LSH cut and MinHash LSH's signature cut live inside one
+    query: they stay executor-local under a checkpoint dir instead of leaving
+    reliable files per call."""
     from nebula_importer_spark.operators.dedup import minhash_lsh_pairs
     from nebula_importer_spark.operators.similarity import embedding_lsh_pairs
 
@@ -64,7 +64,7 @@ def test_multiprobe_lsh_leaves_no_checkpoint_files(spark, checkpoint_dir):
         [(0, [1.0, 0.0]), (1, [0.99, 0.1]), (2, [0.0, 1.0])],
         "vec_id long, embedding array<float>",
     )
-    pairs = embedding_lsh_pairs(vecs, threshold=0.9, multiprobe=True, dim=2)
+    pairs = embedding_lsh_pairs(vecs, threshold=0.9, dim=2)
     assert [(r.id_a, r.id_b) for r in pairs.collect()] == [(0, 1)]
     assert _ckpt_files(checkpoint_dir) == []
 
@@ -73,10 +73,9 @@ def test_multiprobe_lsh_leaves_no_checkpoint_files(spark, checkpoint_dir):
         [(0, text), (1, text + "!"), (2, "an entirely different sentence here")],
         "doc_id long, text string",
     )
-    for carry_sets in (False, True):
-        pairs = minhash_lsh_pairs(docs, threshold=0.5, carry_sets=carry_sets)
-        assert [(r.id_a, r.id_b) for r in pairs.collect()] == [(0, 1)]
-        assert _ckpt_files(checkpoint_dir) == []
+    pairs = minhash_lsh_pairs(docs, threshold=0.5)
+    assert [(r.id_a, r.id_b) for r in pairs.collect()] == [(0, 1)]
+    assert _ckpt_files(checkpoint_dir) == []
 
 
 def test_canonicalize_and_pagerank_identical_under_reliable_checkpoint(

@@ -5,6 +5,7 @@ from __future__ import annotations
 import hashlib
 
 from nebula_importer_spark.operators.dedup import (
+    MINHASH_K,
     exact_duplicates,
     minhash_lsh_pairs,
     minhash_signatures,
@@ -53,10 +54,11 @@ def test_ngram_jaccard_pairs(spark):
 
 def test_minhash_signature_matches_python(spark):
     """mh_i = min over shingles of md5(f'{i}:{shingle}') — engine-portable."""
-    sig = minhash_signatures(_df(spark).where("doc_id = 3"), k=4).collect()[0]
+    sig = minhash_signatures(_df(spark).where("doc_id = 3")).collect()[0]
     words = "completely different content about spark engines".split()
     shingles = {" ".join(words[i : i + 3]) for i in range(len(words) - 2)}
-    for i in range(4):
+    assert set(sig.shset) == shingles
+    for i in range(MINHASH_K):
         expect = min(hashlib.md5(f"{i}:{s}".encode()).hexdigest() for s in shingles)
         assert sig[f"mh{i}"] == expect
 
@@ -66,6 +68,27 @@ def test_minhash_lsh_finds_near_dups_no_false_positives(spark):
     assert (1, 4) in pairs  # identical signatures always share a band
     exact = {(r.id_a, r.id_b) for r in ngram_jaccard_pairs(_df(spark), threshold=0.3).collect()}
     assert pairs <= exact  # candidates verified: no false positives
+
+
+def test_minhash_lsh_runs_one_signature_pass(spark):
+    """Shingle sets ride the signature shuffle and the signature relation is
+    cut once: banding and both verify sides read that cut, so no candidate
+    list is cut and no text is re-shingled. Rebuilding the sets
+    candidate-side ran 12 jobs on this input."""
+    sc = spark.sparkContext
+    text = "the quick brown fox jumps over the lazy dog by the river bank"
+    rows = [(i, f"{text} w{i % 3}") for i in range(20)]
+    rows += [(100 + i, f"doc {i} stands alone in words {i * 7} {i * 11}") for i in range(20)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    group = "test-minhash-lsh-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        pairs = {(r.id_a, r.id_b) for r in minhash_lsh_pairs(docs, threshold=0.5).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert {(i, j) for i in range(20) for j in range(i + 1, 20)} <= pairs
+    assert all(a < 100 for a, _ in pairs)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 8
 
 
 def test_simhash_near_dups_close(spark):

@@ -4,8 +4,8 @@ from __future__ import annotations
 
 import hashlib
 
+from nebula_importer_spark.operators.dedup import fingerprints
 from nebula_importer_spark.operators.textstats import (
-    fingerprints,
     lang_id,
     quality_scores,
     token_counts,

@@ -50,11 +50,15 @@ COMMENTARY = {
         "aggregations."
     ),
     "dedup_minhash_lsh": (
-        "LSH near-dup: one shuffle builds signatures+shingle sets "
-        "(12 partial `min` aggregates, map-side combined), the band "
-        "self-join is hash-partitioned on the digest (bucket-local), and "
-        "exact-Jaccard verification joins shingle sets back to the deduped "
-        "candidate pairs only — candidate-proportional, never O(n²)."
+        "LSH near-dup: one shuffle builds each doc's signature (12 "
+        "partial `min` aggregates, map-side combined) and carries its "
+        "shingle set (`collect_set`); the relation is cut once, so every "
+        "`Scan ExistingRDD` below reads that one computed signature "
+        "relation and the text is scanned once. The band self-join is "
+        "bucket-local: both sides are exchanged on (band, digest), and at "
+        "this scale the planner broadcasts one of them. Exact-Jaccard "
+        "verification joins the carried sets to the deduped candidate "
+        "pairs by id — candidate-proportional, never O(n²)."
     ),
     "ann_cosine_topk": (
         "Brute-force cosine: probes broadcast (`BroadcastNestedLoopJoin`/"
